@@ -259,7 +259,8 @@ void mm3_sliding_ranges_minhash(const uint8_t *buf, const int64_t *starts,
 }
 
 /* Containment-scan counting kernel (Q2-Q5, the flagship read path):
-   for each of n_rows filters (row_bytes bytes each, LSB-first bits) and
+   for each of n_rows filters (LSB-first bits; row r starts row_stride
+   bytes after row r-1, so a header-prefixed state matrix is read in place) and
    each of nq queries, count query k-grams whose num_hash bit positions
    are ALL set. Query q's masked bit indices live at
    idx[qoff[q] .. qoff[q+1]), laid out gram-major (gram g's seeds are
@@ -269,7 +270,7 @@ void mm3_sliding_ranges_minhash(const uint8_t *buf, const int64_t *starts,
    their (shared, ~MB-sized) index arrays through L2 — the vectorized
    analog of the reference's per-filter OpenMP count loop
    (kwage.cpp:409-423) without numpy's byte-expanded scratch. */
-void bloom_scan_count(const uint8_t *B, int64_t n_rows, int64_t row_bytes,
+void bloom_scan_count(const uint8_t *B, int64_t n_rows, int64_t row_stride,
                       const uint32_t *idx, const int64_t *qoff, int64_t nq,
                       int64_t num_hash, int32_t *out) {
     /* Block queries so each block's index stream (~192 KB) stays in L2
@@ -286,7 +287,7 @@ void bloom_scan_count(const uint8_t *B, int64_t n_rows, int64_t row_bytes,
             q1++;
         }
         for (int64_t r = 0; r < n_rows; r++) {
-            const uint8_t *bits = B + r * row_bytes;
+            const uint8_t *bits = B + r * row_stride;
             int32_t *orow = out + r * nq;
             for (int64_t q = q0; q < q1; q++) {
                 const uint32_t *qi = idx + qoff[q];
@@ -310,9 +311,10 @@ void bloom_scan_count(const uint8_t *B, int64_t n_rows, int64_t row_bytes,
 /* Bit-matrix transpose via 8x8 blocks (the classic delta-swap network):
    B (n_rows x row_bytes, LSB-first bits) -> S (row_bytes*8 slices of
    slice_bytes = ceil(n_rows/8) bytes), so slice i's byte s bit k is
-   row (8s+k)'s bit i. Feeds bloom_scan_count_sliced. */
+   row (8s+k)'s bit i; row r starts row_stride bytes after row r-1.
+   Feeds bloom_scan_count_sliced. */
 void bit_transpose(const uint8_t *B, int64_t n_rows, int64_t row_bytes,
-                   uint8_t *S) {
+                   int64_t row_stride, uint8_t *S) {
     int64_t slice_bytes = (n_rows + 7) >> 3;
     for (int64_t r0 = 0; r0 < n_rows; r0 += 8) {
         int nr = n_rows - r0 < 8 ? (int)(n_rows - r0) : 8;
@@ -320,7 +322,7 @@ void bit_transpose(const uint8_t *B, int64_t n_rows, int64_t row_bytes,
         for (int64_t j = 0; j < row_bytes; j++) {
             uint64_t x = 0;
             for (int k = 0; k < nr; k++)
-                x |= (uint64_t)B[(r0 + k) * row_bytes + j] << (8 * k);
+                x |= (uint64_t)B[(r0 + k) * row_stride + j] << (8 * k);
             uint64_t t;
             t = (x ^ (x >> 7))  & 0x00AA00AA00AA00AAULL; x ^= t ^ (t << 7);
             t = (x ^ (x >> 14)) & 0x0000CCCC0000CCCCULL; x ^= t ^ (t << 14);
@@ -531,7 +533,7 @@ if os.environ.get("KWAGE_DISABLE_NATIVE", "") != "1":
                 ctypes.c_void_p, _i64, _i64, ctypes.c_void_p,
                 ctypes.c_void_p, _i64, _i64, ctypes.c_void_p]
             _lib.bit_transpose.argtypes = [
-                ctypes.c_void_p, _i64, _i64, ctypes.c_void_p]
+                ctypes.c_void_p, _i64, _i64, _i64, ctypes.c_void_p]
             _lib.bloom_scatter.argtypes = [
                 ctypes.c_void_p, _i64, ctypes.c_void_p, _i64, _i64, _i64]
             _lib.hll_update.argtypes = [
@@ -648,22 +650,47 @@ def cms_update(table: np.ndarray, log2_w: int, hashes: np.ndarray) -> None:
                     h.ctypes.data, h.shape[0], stride)
 
 
+def _byte_rows(B: np.ndarray) -> np.ndarray:
+    """B itself when it is a uint8 row matrix the kernels can read in place
+    (contiguous columns, any row stride, e.g. the bit columns of
+    header-prefixed states); a contiguous copy otherwise."""
+    if (B.ndim == 2 and B.dtype == np.uint8 and B.strides[1] == 1
+            and B.strides[0] >= B.shape[1]):
+        return B
+    return np.ascontiguousarray(B, dtype=np.uint8)
+
+
 def bloom_scan_count(B: np.ndarray, idx: np.ndarray, qoff: np.ndarray,
                      num_hash: int) -> np.ndarray:
-    """Per-(filter row, query) match counts — native scan kernel.
+    """Per-(filter row, query) match counts — native scan kernel; the
+    numpy gather + AND + popcount fallback is its parity oracle.
 
-    B: (n_rows, row_bytes) uint8 contiguous; idx: flat masked bit indices
-    (uint32), query q at idx[qoff[q]:qoff[q+1]] gram-major; returns
-    (n_rows, nq) int32.
+    B: (n_rows, row_bytes) uint8 with contiguous columns; idx: flat masked
+    bit indices (uint32), query q at idx[qoff[q]:qoff[q+1]] gram-major;
+    returns (n_rows, nq) int32.
     """
-    B = np.ascontiguousarray(B, dtype=np.uint8)
+    B = _byte_rows(B)
     idx = np.ascontiguousarray(idx, dtype=np.uint32)
     qoff = np.ascontiguousarray(qoff, dtype=np.int64)
     nq = qoff.shape[0] - 1
+    if not HAVE_NATIVE:
+        out = np.zeros((B.shape[0], max(nq, 0)), dtype=np.int32)
+        for q in range(nq):
+            flat = idx[qoff[q]:qoff[q + 1]]
+            if flat.size == 0:
+                continue
+            byte_idx = (flat >> np.uint32(3)).astype(np.intp)
+            bit_shift = (flat & np.uint32(7)).astype(np.uint8)
+            chunk = max(1, (1 << 24) // flat.size)  # ~16 MB gather scratch
+            for r0 in range(0, B.shape[0], chunk):
+                g = (B[r0:r0 + chunk, byte_idx] >> bit_shift) & np.uint8(1)
+                out[r0:r0 + g.shape[0], q] = g.reshape(
+                    g.shape[0], -1, num_hash).all(axis=2).sum(axis=1)
+        return out
     out = np.empty((B.shape[0], max(nq, 0)), dtype=np.int32)
     if B.shape[0] and nq:
         _lib.bloom_scan_count(
-            B.ctypes.data, B.shape[0], B.shape[1],
+            B.ctypes.data, B.shape[0], B.strides[0],
             idx.ctypes.data, qoff.ctypes.data, nq, num_hash,
             out.ctypes.data)
     return out
@@ -673,13 +700,14 @@ def transpose_bits(B: np.ndarray) -> np.ndarray:
     """(n_rows, row_bytes) uint8 LSB-first -> bit-sliced (m_bits,
     ceil(n_rows/8)) uint8 LSB-first: slice b holds bit b of every row.
     Native 8x8-block transpose; chunked numpy fallback."""
-    B = np.ascontiguousarray(B, dtype=np.uint8)
+    B = _byte_rows(B)
     n, row_bytes = B.shape
     slice_bytes = (n + 7) >> 3
     if HAVE_NATIVE:
         S = np.zeros((row_bytes * 8, slice_bytes), dtype=np.uint8)
         if n:
-            _lib.bit_transpose(B.ctypes.data, n, row_bytes, S.ctypes.data)
+            _lib.bit_transpose(B.ctypes.data, n, row_bytes, B.strides[0],
+                               S.ctypes.data)
         return S
     chunk = 2048  # multiple of 8: keeps chunk packing byte-aligned
     parts = []

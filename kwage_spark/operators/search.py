@@ -8,22 +8,30 @@ hash matrix is broadcast; every partition gathers + ANDs + popcounts its
 own filters locally. No shuffle at query time, embarrassingly parallel,
 exactly like the OpenMP loop over DB files (`kwage.cpp:76-96`).
 
+Both operators share one scan core (`_bloom_scan`): the bloom rows are
+projected to group cols + state (+ meta) and cross the JVM→Python boundary
+once, in one mapInArrow pass. Each Arrow batch's states are viewed in
+place as an (n, 24 + m/8) byte matrix, validated in one vectorized pass,
+and counted against every query per row chunk; `containment_search` and
+`containment_counts` only differ in how they emit those count matrices.
+
 Semantics replicated exactly:
   * query k-grams deduped before probing (Q1, `kwage.cpp:362-366`)
   * per-k-gram membership = AND over seeds (Q3, `kwage.cpp:409-423`)
   * threshold = int(t * n_unique) float->int TRUNCATION, match iff
     count >= threshold (Q5, `kwage.cpp:388,497`)
   * zero-k-gram query produces no rows (F10, `kwage.cpp:366-371`)
-  * results sorted descending by num_kmers_found (Q8, `output.h:27-32`)
+  * results sorted descending by num_kmers_found (Q8, `output.h:27-32`):
+    one single-partition sort of the filtered result, so the scan still
+    runs once (a global orderBy's range sampling would re-run it)
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Sequence
+from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,20 +63,23 @@ def _count_matrix_chunks(B: np.ndarray, flat_q: np.ndarray,
         index set per row. This is KWAGE's bit-sliced layout decision
         (build_db.cpp:224-231) applied per batch: ~4x faster per core and
         cache-friendly at high parallelism.
-      * few queries: row-major kernel (transpose not amortized).
+      * few queries, or no native kernels: row-major kernel (transpose
+        not amortized); without a C compiler it is the numpy gather +
+        AND + popcount reference, which returns the same matrix.
 
     The sliced kernel accumulates per-row counts in uint16, so it is only
     selected when every query has < 2^16 unique k-grams; a jumbo query
     (>= 64 KB of unique grams) routes the whole batch to the int32
     row-major kernel instead of silently wrapping counts mod 65536.
 
-    Caller must have checked _native.HAVE_NATIVE.
+    B may be a row-strided view (e.g. the bit columns of a state matrix):
+    both kernels read it in place.
     """
     from ..kernels import _native
     n = B.shape[0]
     max_grams = (int((np.diff(qoff_q) // max(num_hash, 1)).max())
                  if qoff_q.shape[0] > 1 else 0)
-    if nq >= 64 and max_grams < (1 << 16):
+    if _native.HAVE_NATIVE and nq >= 64 and max_grams < (1 << 16):
         row_chunk = max(64, (64 << 20) // max(4 * nq, 1))
         for r0 in range(0, n, row_chunk):
             sub = B[r0:r0 + row_chunk]
@@ -82,157 +93,157 @@ def _count_matrix_chunks(B: np.ndarray, flat_q: np.ndarray,
                 B[r0:r0 + row_chunk], flat_q, qoff_q, num_hash)
 
 
+class _Queries(NamedTuple):
+    """Broadcast query set: pre-masked bit indices, not raw hashes, so
+    executors do zero per-query prep (≙ broadcasting the query's
+    slice-index set, Q2). The flat/offset form feeds the scan kernels in
+    ONE call per row chunk across ALL queries."""
+    qids: np.ndarray    # (nq,) int64
+    nuniq: np.ndarray   # (nq,) int64 unique k-grams; 0 = silent no-match (F10)
+    thr: np.ndarray     # (nq,) int64 int(t * n_unique) truncation (kwage.cpp:388)
+    flat: np.ndarray    # uint32 masked bit indices, gram-major per query
+    qoff: np.ndarray    # (nq + 1,) int64 offsets into flat
+
+
+def _mismatch(op: str, state, cfg: SketchConfig) -> ValueError:
+    """The one error for a bloom row the configured scan cannot read: a
+    different (log2_m, num_hash), another sketch kind labelled bloom, or a
+    null/truncated state. Decodes whatever header bytes the row has."""
+    state = bytes(state or b"")
+    magic, _ver, l2m, nh = struct.unpack("<IBBB", state[:7].ljust(7, b"\0"))
+    return ValueError(
+        f"{op}: state params (magic=0x{magic:08x}, log2_m={l2m}, "
+        f"num_hash={nh}, {len(state)} bytes) != cfg (magic="
+        f"0x{_BLOOM_MAGIC:08x}, log2_m={cfg.bloom.log2_m}, num_hash="
+        f"{cfg.bloom.num_hash}, {_HDR.size + cfg.bloom.n_bytes} bytes); "
+        "fold() the store or search with the matching SketchConfig")
+
+
+def _state_matrix(col, cfg: SketchConfig, op: str) -> np.ndarray:
+    """Zero-copy (n, 24 + m/8) uint8 view of an Arrow binary column of
+    serialized BloomStates, after checking every row's width (from the
+    offsets) and header (magic, log2_m, num_hash) against cfg. A state
+    written with other params would otherwise be scanned with the wrong
+    mask and return silently wrong counts (heterogeneous stores must
+    fold() first). CRC is not re-verified, matching the reference's read
+    path, which checksums at build/merge time only."""
+    import pyarrow as pa
+    n = len(col)
+    width = _HDR.size + cfg.bloom.n_bytes
+    odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _validity, off_buf, data_buf = col.buffers()
+    offs = np.frombuffer(off_buf, dtype=odt)[col.offset:col.offset + n + 1]
+    bad = np.flatnonzero(np.diff(offs) != width)  # nulls have width 0
+    if bad.size:
+        raise _mismatch(op, col[int(bad[0])].as_py(), cfg)
+    M = np.frombuffer(data_buf, dtype=np.uint8)[
+        offs[0]:offs[0] + n * width].reshape(n, width)
+    magic = np.ascontiguousarray(M[:, :4]).view("<u4")[:, 0]
+    bad = np.flatnonzero((magic != _BLOOM_MAGIC) | (M[:, 5] != cfg.bloom.log2_m)
+                         | (M[:, 6] != cfg.bloom.num_hash))
+    if bad.size:
+        raise _mismatch(op, M[bad[0]].tobytes(), cfg)
+    return M
+
+
+def _bloom_scan(sketches: DataFrame, queries: Sequence[tuple[int, str]],
+                cfg: SketchConfig, threshold: float, keep: list,
+                emit: Callable, schema: str, op: str) -> DataFrame:
+    """The containment scan core: bloom rows projected to ``keep + state``
+    cross into Python once (mapInArrow); every batch's states become one
+    zero-copy matrix and each row chunk one (rows x nq) count matrix for
+    ALL queries (row-outer, so each filter streams through cache once,
+    ≙ the reference's per-filter count loop kwage.cpp:409-423).
+
+    ``emit(chunks, q)`` is the operator's output policy: it consumes the
+    partition's ``(kept columns, row offset, count matrix)`` stream and
+    yields Arrow record batches of ``schema``.
+    """
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError("threshold must be in (0, 1]")
+    mask = np.uint32(cfg.bloom.m - 1)
+    prepared = prepare_queries(queries, cfg)
+    idx = [(h.astype(np.uint32) & mask).ravel() for _, h in prepared]
+    nuniq = np.asarray([h.shape[0] for _, h in prepared], dtype=np.int64)
+    bq = sketches.sparkSession.sparkContext.broadcast(_Queries(
+        qids=np.asarray([qid for qid, _ in prepared], dtype=np.int64),
+        nuniq=nuniq, thr=(threshold * nuniq).astype(np.int64),
+        flat=np.concatenate(idx) if idx else np.empty(0, dtype=np.uint32),
+        qoff=np.concatenate(([0], np.cumsum([i.size for i in idx])))
+        .astype(np.int64)))
+    hdr, num_hash, n_keep = _HDR.size, cfg.bloom.num_hash, len(keep)
+
+    def scan(batches):
+        q = bq.value
+
+        def chunks():
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                M = _state_matrix(batch.column(n_keep), cfg, op)
+                cols = batch.columns[:n_keep]
+                for r0, fm in _count_matrix_chunks(M[:, hdr:], q.flat, q.qoff,
+                                                   num_hash, len(q.qids)):
+                    yield cols, r0, fm
+        yield from emit(chunks(), q)
+
+    bloom_rows = sketches.filter(F.col("kind") == KIND_BLOOM)
+    return bloom_rows.select(*keep, "state").mapInArrow(scan, schema)
+
+
 def containment_search(sketches: DataFrame, queries: Sequence[tuple[int, str]],
                        cfg: SketchConfig, threshold: float = 1.0,
                        emit_all: bool = False, ordered: bool = True) -> DataFrame:
     """sketches(bloom rows) x queries -> match DataFrame.
 
-    Output: group_cols…, query_id, num_kmers, num_kmers_found,
-    percent_kmers_found — the reference's CSV/JSON result shape
-    (`output.h:35-59`).
+    Output: group_cols…, [sample_metadata,] query_id, num_kmers,
+    num_kmers_found, percent_kmers_found — the reference's CSV/JSON result
+    shape (`output.h:35-59`). ``emit_all`` emits every (group, query) pair
+    of a non-empty query, not only those at or above the threshold.
+
+    ``ordered`` (Q8/Q9: query_id asc, num_kmers_found desc, then group
+    cols) moves the filtered result into one partition and sorts it there:
+    the bloom store is still scanned exactly once. Sinks or joins with a
+    large result fan-out should pass ``ordered=False`` and skip that
+    single-partition step.
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError("threshold must be in (0, 1]")
-    prepared = prepare_queries(queries, cfg)
     gcols = list(cfg.group_cols)
-    sc = sketches.sparkSession.sparkContext
-    # broadcast pre-masked bit indices, not raw hashes: executors do zero
-    # per-query prep (≙ broadcasting the query's slice-index set, Q2).
-    # The flat/offset form feeds the native scan kernel in ONE call per
-    # row-chunk across ALL queries.
-    mask = np.uint32(cfg.bloom.m - 1)
-    masked = [(int(qid), (h.astype(np.uint32) & mask), int(h.shape[0]))
-              for qid, h in prepared]
-    flat_idx = (np.concatenate([m.ravel() for _, m, _ in masked])
-                if masked else np.empty(0, dtype=np.uint32))
-    qoff = np.concatenate(
-        ([0], np.cumsum([m.size for _, m, _ in masked]))).astype(np.int64)
-    bq = sc.broadcast((masked, flat_idx, qoff))
-    hdr_size = _HDR.size  # BloomState header prefix before raw bits
-    n_bytes = cfg.bloom.n_bytes
-    num_hash = cfg.bloom.num_hash
-    cfg_log2_m = cfg.bloom.log2_m
-    has_meta = "meta" in sketches.columns  # FilterInfo passthrough (S11)
+    keep = [F.col(c).cast("string").alias(c) for c in gcols]
+    names = gcols[:]
     schema = ", ".join(f"{c} string" for c in gcols)
-    if has_meta:
+    if "meta" in sketches.columns:  # FilterInfo passthrough (S11)
+        keep.append(F.col("meta"))
+        names.append("sample_metadata")
         schema += ", sample_metadata map<string,string>"
     schema += ", " + RESULT_SCHEMA_TAIL
+    names += ["query_id", "num_kmers", "num_kmers_found", "percent_kmers_found"]
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Whole-batch matrix scan: stack the batch's filters into a
-        # (rows, m/8) byte matrix once, then count matches for ALL queries
-        # in one native-kernel call per row chunk (bloom_scan_count —
-        # row-outer so each filter streams through cache once, ≙ the
-        # reference's per-filter count loop kwage.cpp:409-423). Fallback:
-        # per-query numpy gather+AND+popcount, bit-identical (parity-
-        # tested). CRC is not re-verified here, matching the reference's
-        # read path, which checksums at build/merge time only.
-        from ..kernels import _native
-        qs, flat_q, qoff_q = bq.value
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+    def emit(chunks, q):
+        # vectorized across queries: one record batch per row chunk, not
+        # one per (query, chunk) — with thousands of queries per-batch
+        # overhead would otherwise dwarf the counting kernel itself
+        import pyarrow as pa
+        valid = q.nuniq > 0
+        for cols, r0, fm in chunks:
+            ok = valid[None, :] if emit_all else (fm >= q.thr) & valid
+            rsel, qsel = np.nonzero(np.broadcast_to(ok, fm.shape))
+            if rsel.size == 0:
                 continue
-            B = np.empty((n, n_bytes), dtype=np.uint8)
-            for i, s in enumerate(pdf["state"].to_numpy()):
-                # validate each row's serialized header (12 cheap bytes)
-                # BEFORE the fixed-offset bit read: a state written with a
-                # different (log2_m, num_hash) would otherwise be scanned
-                # with the wrong mask / truncated bits and return silently
-                # wrong counts (heterogeneous stores must fold() first)
-                # plain format string: struct.Struct objects don't pickle
-                magic, _ver, row_l2m, row_nh = struct.unpack_from("<IBBB", s, 0)
-                if magic != _BLOOM_MAGIC:
-                    raise ValueError("containment_search: non-bloom state "
-                                     f"magic 0x{magic:08x} in bloom rows")
-                if row_l2m != cfg_log2_m or row_nh != num_hash:
-                    raise ValueError(
-                        "containment_search: state params (log2_m="
-                        f"{row_l2m}, num_hash={row_nh}) != cfg ("
-                        f"{cfg_log2_m}, {num_hash}); fold() the store or "
-                        "search with the matching SketchConfig")
-                B[i] = np.frombuffer(s, dtype=np.uint8, count=n_bytes,
-                                     offset=hdr_size)
-            gvals = {c: pdf[c].to_numpy() for c in gcols}
-            mvals = pdf["meta"].to_numpy() if has_meta else None
-            frames = []
+            take = pa.array(rsel + r0)
+            found = fm[rsel, qsel].astype(np.int64)
+            nk = q.nuniq[qsel]
+            yield pa.RecordBatch.from_arrays(
+                [c.take(take) for c in cols]
+                + [pa.array(q.qids[qsel]), pa.array(nk), pa.array(found),
+                   pa.array(100.0 * found / nk)], names=names)
 
-            def emit(qid: int, n_unique: int, found: np.ndarray,
-                     base: int) -> None:
-                q_threshold = int(threshold * n_unique)  # kwage.cpp:388
-                sel = (np.arange(found.shape[0]) if emit_all
-                       else np.nonzero(found >= q_threshold)[0])
-                if sel.size == 0:
-                    return
-                rows_sel = sel + base
-                f = {c: gvals[c][rows_sel] for c in gcols}
-                if mvals is not None:
-                    f["sample_metadata"] = mvals[rows_sel]
-                f["query_id"] = np.full(sel.size, qid, dtype=np.int64)
-                f["num_kmers"] = np.full(sel.size, n_unique, dtype=np.int64)
-                f["num_kmers_found"] = found[sel]
-                f["percent_kmers_found"] = 100.0 * found[sel] / n_unique
-                frames.append(pd.DataFrame(f))
-
-            if _native.HAVE_NATIVE and qs:
-                # one kernel call per row chunk covers EVERY query; the
-                # (rows x nq) int32 count matrix is chunked to ~16 MB.
-                # Emission is vectorized across queries too — one frame
-                # per chunk, not one per (query, chunk): with thousands
-                # of queries the per-frame pandas overhead otherwise
-                # dwarfs the counting kernel itself.
-                nq = len(qs)
-                qids_arr = np.asarray([q[0] for q in qs], dtype=np.int64)
-                nuniq_arr = np.asarray([q[2] for q in qs], dtype=np.int64)
-                # int(threshold * n) truncation per query (kwage.cpp:388);
-                # n_unique == 0 queries are silently invalid (F10)
-                thr_arr = (threshold * nuniq_arr).astype(np.int64)
-                valid = nuniq_arr > 0
-                for r0, fm in _count_matrix_chunks(B, flat_q, qoff_q,
-                                                   num_hash, nq):
-                    ok = (np.ones_like(fm, dtype=bool) if emit_all
-                          else fm >= thr_arr[None, :]) & valid[None, :]
-                    rsel, qsel = np.nonzero(ok)
-                    if rsel.size == 0:
-                        continue
-                    rows_sel = rsel + r0
-                    f = {c: gvals[c][rows_sel] for c in gcols}
-                    if mvals is not None:
-                        f["sample_metadata"] = mvals[rows_sel]
-                    f["query_id"] = qids_arr[qsel]
-                    f["num_kmers"] = nuniq_arr[qsel]
-                    f["num_kmers_found"] = fm[rsel, qsel].astype(np.int64)
-                    f["percent_kmers_found"] = (100.0 * f["num_kmers_found"]
-                                                / f["num_kmers"])
-                    frames.append(pd.DataFrame(f))
-            else:
-                for qid, idx, n_unique in qs:
-                    if n_unique == 0:          # F10: silent no-match
-                        continue
-                    flat = idx.ravel()
-                    byte_idx = (flat >> np.uint32(3)).astype(np.int64)
-                    bit_shift = (flat & np.uint32(7)).astype(np.uint8)
-                    found = np.empty(n, dtype=np.int64)
-                    # bound the gather scratch to ~16 MB per chunk
-                    chunk = max(1, (1 << 24) // max(flat.size, 1))
-                    for r0 in range(0, n, chunk):
-                        sub = B[r0:r0 + chunk]
-                        g = (sub[:, byte_idx] >> bit_shift) & np.uint8(1)
-                        hits = g.reshape(sub.shape[0], n_unique,
-                                         num_hash).all(axis=2)
-                        found[r0:r0 + sub.shape[0]] = hits.sum(axis=1)
-                    emit(qid, n_unique, found, 0)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    bloom_rows = sketches.filter(F.col("kind") == KIND_BLOOM)
-    res = bloom_rows.mapInPandas(scan, schema=schema)
+    res = _bloom_scan(sketches, queries, cfg, threshold, keep, emit, schema,
+                      "containment_search")
     if not ordered:
-        # large fan-out consumers (sinks, joins) don't need the global
-        # sort — a range shuffle of every result row — skip it on request
         return res
-    # Q8/Q9: ascending query id, descending hit count within a query
-    return res.orderBy("query_id", F.desc("num_kmers_found"), *gcols)
+    return (res.repartition(1)
+            .sortWithinPartitions("query_id", F.desc("num_kmers_found"),
+                                  *gcols))
 
 
 def containment_counts(sketches: DataFrame,
@@ -242,83 +253,31 @@ def containment_counts(sketches: DataFrame,
     """Per-query MATCH COUNTS (Q10 result-merge analog): how many groups
     contain ≥ threshold of each query's k-grams.
 
-    Same scan kernel as containment_search, but each partition emits one
-    row per query (its local match count) and a groupBy sums them — the
-    result traffic is O(n_queries x n_partitions) rows regardless of how
-    many groups match, which is the right shape when queries are broad
-    (a per-group emit would ship millions of match rows nobody reads).
-    Output: query_id, num_kmers, n_matches.
+    Same scan core as containment_search, but each partition emits one
+    row per query (its local match count) and a single-partition sum
+    merges them — the result traffic is O(n_queries x n_partitions) rows
+    regardless of how many groups match, which is the right shape when
+    queries are broad (a per-group emit would ship millions of match rows
+    nobody reads). Output: query_id, num_kmers, n_matches.
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError("threshold must be in (0, 1]")
-    prepared = prepare_queries(queries, cfg)
-    sc = sketches.sparkSession.sparkContext
-    mask = np.uint32(cfg.bloom.m - 1)
-    masked = [(int(qid), (h.astype(np.uint32) & mask), int(h.shape[0]))
-              for qid, h in prepared]
-    flat_idx = (np.concatenate([m.ravel() for _, m, _ in masked])
-                if masked else np.empty(0, dtype=np.uint32))
-    qoff = np.concatenate(
-        ([0], np.cumsum([m.size for _, m, _ in masked]))).astype(np.int64)
-    bq = sc.broadcast((masked, flat_idx, qoff))
-    hdr_size = _HDR.size
-    n_bytes = cfg.bloom.n_bytes
-    num_hash = cfg.bloom.num_hash
-    cfg_log2_m = cfg.bloom.log2_m
+    def emit(chunks, q):
+        import pyarrow as pa
+        valid = q.nuniq > 0
+        totals = np.zeros(len(q.qids), dtype=np.int64)
+        for _cols, _r0, fm in chunks:
+            totals += ((fm >= q.thr) & valid).sum(axis=0)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(q.qids), pa.array(q.nuniq), pa.array(totals)],
+            names=["query_id", "num_kmers", "n_matches"])
 
-    def scan_counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import _native
-        qs, flat_q, qoff_q = bq.value
-        nq = len(qs)
-        if nq == 0:
-            return
-        qids_arr = np.asarray([q[0] for q in qs], dtype=np.int64)
-        nuniq_arr = np.asarray([q[2] for q in qs], dtype=np.int64)
-        thr_arr = (threshold * nuniq_arr).astype(np.int64)
-        valid = nuniq_arr > 0
-        totals = np.zeros(nq, dtype=np.int64)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            B = np.empty((n, n_bytes), dtype=np.uint8)
-            for i, s in enumerate(pdf["state"].to_numpy()):
-                magic, _ver, row_l2m, row_nh = struct.unpack_from("<IBBB", s, 0)
-                if (magic != _BLOOM_MAGIC or row_l2m != cfg_log2_m
-                        or row_nh != num_hash):
-                    raise ValueError("containment_counts: state/config "
-                                     "param mismatch; fold() first")
-                B[i] = np.frombuffer(s, dtype=np.uint8, count=n_bytes,
-                                     offset=hdr_size)
-            if _native.HAVE_NATIVE:
-                for _r0, fm in _count_matrix_chunks(B, flat_q, qoff_q,
-                                                    num_hash, nq):
-                    totals += ((fm >= thr_arr[None, :]) & valid[None, :]
-                               ).sum(axis=0)
-            else:
-                for j, (qid, idx, n_unique) in enumerate(qs):
-                    if n_unique == 0:
-                        continue
-                    flat = idx.ravel()
-                    byte_idx = (flat >> np.uint32(3)).astype(np.int64)
-                    bit_shift = (flat & np.uint32(7)).astype(np.uint8)
-                    chunk = max(1, (1 << 24) // max(flat.size, 1))
-                    for r0 in range(0, n, chunk):
-                        sub = B[r0:r0 + chunk]
-                        g = (sub[:, byte_idx] >> bit_shift) & np.uint8(1)
-                        found = g.reshape(sub.shape[0], n_unique,
-                                          num_hash).all(axis=2).sum(axis=1)
-                        totals[j] += int((found >= thr_arr[j]).sum())
-        yield pd.DataFrame({"query_id": qids_arr, "num_kmers": nuniq_arr,
-                            "n_matches": totals})
-
-    bloom_rows = sketches.filter(F.col("kind") == KIND_BLOOM)
-    partials = bloom_rows.mapInPandas(
-        scan_counts, schema="query_id long, num_kmers long, n_matches long")
-    return (partials.groupBy("query_id", "num_kmers")
+    partials = _bloom_scan(sketches, queries, cfg, threshold, [], emit,
+                           "query_id long, num_kmers long, n_matches long",
+                           "containment_counts")
+    return (partials.repartition(1)
+            .groupBy("query_id", "num_kmers")
             .agg(F.sum("n_matches").alias("n_matches"))
             .filter(F.col("num_kmers") > 0)  # F10: no row for empty queries
-            .orderBy("query_id"))
+            .sortWithinPartitions("query_id"))
 
 
 def exact_containment(files: DataFrame, queries: Sequence[tuple[int, str]],

@@ -59,3 +59,30 @@ def has_wholestage_codegen(df: DataFrame) -> bool:
     df.collect()  # count() spawns a new plan; collect finalizes THIS one
     executed = df._jdf.queryExecution().executedPlan().toString()
     return "*(" in executed
+
+
+def executed_nodes(df: DataFrame) -> list[tuple[str, dict[str, float]]]:
+    """(node name, SQL metric values) for every operator of ``df``'s
+    executed plan, pre-order: AQE's final plan with its query stages
+    opened. Call after an action on ``df`` itself (e.g. ``collect()``);
+    ``count()`` plans and runs a different query."""
+    out = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        metrics = {}
+        it = node.metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            metrics[kv._1()] = float(kv._2().value())
+        out.append((node.nodeName(), metrics))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    return out

@@ -5,6 +5,7 @@ against exact oracles (the reference's dual-implementation test pattern,
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from kwage_spark.config import SketchConfig
 from kwage_spark.kernels import BloomParams, BloomState, CMSState, HLLState, KLLState
@@ -235,3 +236,61 @@ def test_containment_counts_matches_search(spark, sketches, corpus):
     for qid, n in got.items():
         assert n == want.get(qid, 0), qid
     assert set(want) <= set(got)
+
+
+def test_search_ordered_equals_sorted_unordered(spark, sketches, corpus):
+    """The ordered result is exactly the unordered rows sorted by
+    (query_id asc, num_kmers_found desc, group cols asc) — tie-break
+    included — on a multi-partition input."""
+    queries = make_query_snippets(corpus, CFG.k)
+    qlist = [(int(r.query_id), r.snippet) for r in queries.itertuples()]
+    multi = sketches.repartition(5)
+    got = containment_search(multi, qlist, CFG, threshold=0.2,
+                             emit_all=True).collect()
+    unordered = containment_search(multi, qlist, CFG, threshold=0.2,
+                                   emit_all=True, ordered=False).collect()
+    want = sorted(unordered, key=lambda r: (r.query_id, -r.num_kmers_found,
+                                            r.repo, r.lang))
+    assert got == want
+    # the group-col tie-break is exercised: equal (query, count) neighbours
+    assert any((a.query_id, a.num_kmers_found) == (b.query_id, b.num_kmers_found)
+               for a, b in zip(got, got[1:]))
+
+
+_REFOLD = "fold\\(\\) the store or search with the matching SketchConfig"
+
+
+def _bloom_only(df):
+    return df.filter("kind = 'bloom'")
+
+
+@pytest.mark.parametrize("op", ["search", "counts"])
+@pytest.mark.parametrize("case", ["cfg_log2_m", "cfg_num_hash",
+                                  "mixed_log2_m", "non_bloom"])
+def test_scan_rejects_unreadable_bloom_rows(spark, sketches, corpus, op, case):
+    """Rows the configured scan cannot read fail the query with one
+    detailed ValueError, whichever operator scans them: a store built with
+    another log2_m (other width) or num_hash (same width, other header), a
+    single batch mixing filter widths, or a non-bloom state labelled
+    kind='bloom'. Never a mis-read or a worker crash."""
+    from kwage_spark.operators.search import containment_counts
+    cfg, rows = CFG, _bloom_only(sketches)
+    if case.startswith("cfg_"):
+        l2m, nh = CFG.bloom.log2_m, CFG.bloom.num_hash
+        cfg = SketchConfig(group_cols=CFG.group_cols, content_col=CFG.content_col,
+                           bloom=BloomParams(k=CFG.bloom.k,
+                                             log2_m=l2m + 2 * (case == "cfg_log2_m"),
+                                             num_hash=nh + (case == "cfg_num_hash")))
+    elif case == "mixed_log2_m":
+        small = SketchConfig(bloom=BloomParams(k=CFG.bloom.k, log2_m=12,
+                                               num_hash=CFG.bloom.num_hash))
+        other = _bloom_only(build_sketches(
+            spark.createDataFrame(corpus.head(6)), small))
+        rows = rows.unionByName(other).coalesce(1)  # one Arrow batch
+    else:
+        hll = sketches.filter("kind = 'hll'").withColumn("kind", F.lit("bloom"))
+        rows = rows.unionByName(hll).coalesce(1)
+    snippets = [(0, corpus.iloc[0]["content"][:60])]
+    fn = containment_search if op == "search" else containment_counts
+    with pytest.raises(Exception, match=_REFOLD):
+        fn(rows, snippets, cfg, threshold=0.5).collect()

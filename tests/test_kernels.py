@@ -519,3 +519,41 @@ def test_jumbo_query_routes_to_int32_kernel():
     # uint16 wrap would report n_grams_jumbo - 65536 = 500
     assert (full[:, 0] == n_grams_jumbo).all(), full[:, 0]
     assert (full[:, 1:] == 1).all()
+
+
+def test_count_matrix_numpy_fallback_matches_native():
+    """The numpy reference returns the same (rows x nq) count matrix as
+    _count_matrix_chunks' native kernels — row-major (nq < 64) and
+    bit-sliced (nq >= 64) — on the row-strided bit columns of a
+    header-prefixed state matrix, zero-gram query included."""
+    from kwage_spark.kernels import _native
+    if not _native.HAVE_NATIVE:
+        pytest.skip("no C compiler in this environment")
+    from kwage_spark.operators.search import _count_matrix_chunks
+    rng = np.random.default_rng(31)
+    num_hash, row_bytes, n_rows = 3, 64, 203
+    M = rng.integers(0, 256, size=(n_rows, 24 + row_bytes), dtype=np.uint8)
+    B = M[:, 24:]  # row stride 88 bytes, read in place
+    for nq in (5, 70):
+        idx = [rng.integers(0, row_bytes * 8, dtype=np.uint32,
+                            size=(int(rng.integers(1, 40)), num_hash))
+               for _ in range(nq)]
+        idx[1] = np.empty((0, num_hash), dtype=np.uint32)  # zero-gram query
+        flat = np.concatenate([a.ravel() for a in idx])
+        qoff = np.concatenate(([0], np.cumsum([a.size for a in idx]))
+                              ).astype(np.int64)
+
+        def counts(rows):
+            return np.concatenate([m for _r0, m in _count_matrix_chunks(
+                rows, flat, qoff, num_hash, nq)])
+        try:
+            want = counts(B)
+            contiguous = counts(np.ascontiguousarray(B))
+            _native.HAVE_NATIVE = False
+            got = counts(B)
+        finally:
+            _native.HAVE_NATIVE = True
+        assert want.shape == (n_rows, nq)
+        assert np.array_equal(got, want), nq
+        assert np.array_equal(contiguous, want), nq
+        assert (want[:, 1] == 0).all() and want.max() > 0

@@ -52,6 +52,29 @@ def test_search_has_no_shuffle(spark):
     assert n_ex <= 2, f"unexpected shuffles ({n_ex}):\n{plan}"
 
 
+def test_ordered_search_scans_store_once(spark):
+    """The ordered search sorts its filtered result in one partition: no
+    range-partition exchange (whose sampling job re-runs the Python scan)
+    in the executed plan, and the scan node handles each bloom row once —
+    one query with emit_all returns exactly one row per bloom row."""
+    from kwage_spark.plans.inspect import executed_nodes
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sk = build_sketches(docs, DOC_CFG).cache()
+    try:
+        n_bloom = sk.filter("kind = 'bloom'").count()
+        res = containment_search(sk, [(0, "table value part hash")], DOC_CFG,
+                                 threshold=0.5, emit_all=True)
+        assert len(res.collect()) == n_bloom
+        executed = res._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in executed.lower(), executed
+        scans = [m for name, m in executed_nodes(res)
+                 if name.startswith("MapIn")]
+        assert len(scans) == 1, executed
+        assert scans[0]["pythonNumRowsReceived"] == n_bloom, scans[0]
+    finally:
+        sk.unpersist()
+
+
 def test_small_dim_join_broadcasts(spark):
     q = spark_queries()["metadata_lookup_join"](spark, SF)
     assert has_broadcast_join(q), physical_plan(q)
