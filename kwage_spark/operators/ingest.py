@@ -12,7 +12,9 @@ pandas materialization, on the hot path.
   combine="partial"  (map-side combine, tree-merge)
       stage 1: mapInArrow builds a PARTIAL state per (group × partition);
                raw ``content`` never crosses the network.
-      stage 2: groupBy(group, kind).applyInPandas merges the binary states.
+      stage 2: merge_grouped_states hash-exchanges the partials on
+               (group, kind), sorts each partition by the same keys and
+               merges the binary states run by run in one mapInArrow pass.
       Shuffle volume ≈ min(n_groups × n_partitions, n_rows) × state_size.
       Wins when groups are FEW and LARGE (the KWAGE regime: one filter per
       SRA accession with millions of reads; `bloom.h:118-128` anticipates
@@ -383,26 +385,31 @@ def _driver_group_stats(paths: list[str], cfg: SketchConfig,
     group x resident group). The old Spark-side estimate measured the
     PRE-widen layout and under-costed partial mode by the widen factor
     (measured: a boundary corpus flip-flopped modes run to run on
-    approx_count_distinct noise)."""
+    approx_count_distinct noise).
+
+    Counting is pyarrow's hash aggregation — one row per (row group,
+    group), then one per group — so no Python object exists per input
+    row; a null key is one group, as in Spark's groupBy."""
     try:
-        import collections
+        import pyarrow as pa
         import pyarrow.parquet as pq
-        counts: collections.Counter = collections.Counter()
-        span = 0
-        widen = n_input_parts < target_parallelism
+        gcols = list(cfg.group_cols)
+        per_rg = []
         for path in paths:
             pf = pq.ParquetFile(path)
             for g in range(pf.metadata.num_row_groups):
-                tbl = pf.read_row_group(g, columns=list(cfg.group_cols))
-                cols = [tbl.column(c).to_pylist() for c in cfg.group_cols]
-                keys = list(zip(*cols)) if len(cols) > 1 else cols[0]
-                rg_counts = collections.Counter(keys)
-                span += len(rg_counts)
-                counts.update(rg_counts)
-        if widen:
-            p = max(target_parallelism, 1)
-            span = sum(min(r, p) for r in counts.values())
-        return max(len(counts), 1), max(span, 1)
+                tbl = pf.read_row_group(g, columns=gcols)
+                per_rg.append(tbl.group_by(gcols).aggregate(
+                    [([], "count_all")]))
+        if not per_rg:
+            return 1, 1
+        span = sum(t.num_rows for t in per_rg)
+        totals = pa.concat_tables(per_rg).group_by(gcols).aggregate(
+            [("count_all", "sum")])
+        if n_input_parts < target_parallelism:
+            counts = totals.column("count_all_sum").to_numpy()
+            span = int(np.minimum(counts, max(target_parallelism, 1)).sum())
+        return max(totals.num_rows, 1), max(span, 1)
     except Exception:  # noqa: BLE001
         return None
 

@@ -10,6 +10,7 @@ replaces the pairwise loop. Cross-size merges go through fold() first
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -18,22 +19,110 @@ from ..kernels.bloom import BloomState
 from ..kernels.registry import merge_state_blobs, state_from_bytes
 
 
+#: rows per output Arrow batch of the merge pass — bounds worker memory
+#: when a partition holds thousands of groups of ~100 KB states
+_MERGE_BATCH_ROWS = 256
+
+
+def _run_starts(batch, keys: list[str]) -> np.ndarray:
+    """Row indices of a key-sorted batch where a new key run begins (row 0
+    always does). Two nulls are the same key, as in a groupBy."""
+    import pyarrow.compute as pc
+    n = batch.num_rows
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for c in keys:
+        col = batch.column(c)
+        a, b = col.slice(0, n - 1), col.slice(1)
+        diff = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
+                      pc.xor(pc.is_null(a), pc.is_null(b)))
+        change[1:] |= diff.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change)
+
+
+def _merge_runs(names: list[str], keys: list[str]):
+    """mapInArrow generator over rows sorted by ``keys``: one output row
+    per key run — the run's first row, its states merged by
+    merge_state_blobs (each decoded and crc-checked) and its n_rows /
+    n_kgrams summed. The run still open at a batch's end is carried into
+    the next batch, so memory holds one run's states, not a partition."""
+    import pyarrow as pa
+    sums = [c for c in ("n_rows", "n_kgrams") if c in names]
+    heads_cols = [c for c in names if c != "state" and c not in sums]
+
+    def merge_runs(batches):
+        heads = []            # head rows of the runs not yet emitted, in order
+        states, totals = [], []
+        run_key, run_blobs, run_sums = None, [], []
+        types = {}
+
+        def flush():
+            nonlocal heads, states, totals
+            tbl = pa.Table.from_batches(heads)
+            done = tbl.slice(0, len(states))
+            cols = {c: done.column(c).combine_chunks() for c in heads_cols}
+            cols["state"] = pa.array(states, type=types["state"])
+            for j, c in enumerate(sums):
+                cols[c] = pa.array([t[j] for t in totals], type=types[c])
+            heads = tbl.slice(len(states)).to_batches()
+            states, totals = [], []
+            return pa.RecordBatch.from_arrays([cols[c] for c in names],
+                                              names=names)
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            types = {f.name: f.type for f in batch.schema}
+            starts = _run_starts(batch, keys)
+            continues = run_key == tuple(batch.column(c)[0].as_py()
+                                         for c in keys)
+            heads.append(batch.select(heads_cols).take(
+                pa.array(starts[1:] if continues else starts)))
+            blobs = batch.column("state").to_pylist()
+            seg_sums = [np.add.reduceat(
+                batch.column(c).fill_null(0).to_numpy(), starts).tolist()
+                for c in sums]
+            ends = np.append(starts[1:], n).tolist()
+            for j, (s, e) in enumerate(zip(starts.tolist(), ends)):
+                seg = [t[j] for t in seg_sums]
+                if j == 0 and continues:
+                    run_blobs += blobs[s:e]
+                    run_sums = [a + b for a, b in zip(run_sums, seg)]
+                    continue
+                if run_blobs:
+                    states.append(merge_state_blobs(run_blobs))
+                    totals.append(run_sums)
+                    if len(states) == _MERGE_BATCH_ROWS:
+                        yield flush()
+                run_blobs, run_sums = blobs[s:e], seg
+            run_key = tuple(batch.column(c)[int(starts[-1])].as_py()
+                            for c in keys)
+        if run_blobs:
+            states.append(merge_state_blobs(run_blobs))
+            totals.append(run_sums)
+        if states:
+            yield flush()
+
+    return merge_runs
+
+
 def merge_grouped_states(partials: DataFrame, group_cols: list[str]) -> DataFrame:
-    """groupBy(group_cols, kind) -> merged state rows (the UDAF merge stage)."""
-    schema = partials.schema
+    """Merge state rows to one row per (group_cols…, kind) — the UDAF
+    merge stage, with the input's schema and column order.
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        head = pdf.iloc[:1].copy()
-        head["state"] = [merge_state_blobs(pdf["state"].tolist())]
-        if "n_rows" in pdf:
-            head["n_rows"] = int(pdf["n_rows"].sum())
-        if "n_kgrams" in pdf:
-            head["n_kgrams"] = int(pdf["n_kgrams"].sum())
-        return head
-
+    One hash exchange on (group_cols…, kind) and an in-partition sort on
+    the same keys put each group's partials in one contiguous run; one
+    Arrow pass per partition (mapInArrow) then merges run by run. A run
+    is carried across Arrow batch boundaries, so worker memory is bounded
+    by one group's run of states plus one output batch. Non-state columns
+    come from the run's first row (first-row-wins, like ``meta``)."""
+    keys = [*group_cols, "kind"]
     return (partials
-            .groupBy(*group_cols, "kind")
-            .applyInPandas(merge_group, schema=schema))
+            .repartition(*keys)
+            .sortWithinPartitions(*keys)
+            .mapInArrow(_merge_runs(partials.columns, keys),
+                        schema=partials.schema))
 
 
 def merge_states_global(df: DataFrame, kind: str) -> DataFrame:

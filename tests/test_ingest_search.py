@@ -294,3 +294,45 @@ def test_scan_rejects_unreadable_bloom_rows(spark, sketches, corpus, op, case):
     fn = containment_search if op == "search" else containment_counts
     with pytest.raises(Exception, match=_REFOLD):
         fn(rows, snippets, cfg, threshold=0.5).collect()
+
+
+@pytest.mark.parametrize("n_input_parts,target", [(8, 4), (2, 4)],
+                         ids=["wide-input", "widened"])
+def test_driver_group_stats_matches_counter(tmp_path, n_input_parts, target):
+    """The driver-side (n_groups, n_span) equal a per-row Counter over each
+    parquet row group, null group keys included, with and without the
+    widen model."""
+    import collections
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kwage_spark.operators.ingest import _driver_group_stats
+    rng = np.random.default_rng(11)
+    paths = []
+    for f in range(2):
+        n = 2500
+        repo = [None if i == 0 else f"r{i}" for i in rng.zipf(1.6, n) % 30]
+        lang = [None if i % 9 == 0 else f"l{i % 3}"
+                for i in rng.integers(0, 60, n)]
+        path = str(tmp_path / f"part-{f}.parquet")
+        pq.write_table(pa.table({"repo": repo, "lang": lang,
+                                 "content": ["x"] * n}),
+                       path, row_group_size=400)
+        paths.append(path)
+    counts: collections.Counter = collections.Counter()
+    span = 0
+    for path in paths:
+        pf = pq.ParquetFile(path)
+        assert pf.metadata.num_row_groups > 1
+        for g in range(pf.metadata.num_row_groups):
+            rg = pf.read_row_group(g, columns=["repo", "lang"])
+            rg_counts = collections.Counter(zip(rg.column("repo").to_pylist(),
+                                                rg.column("lang").to_pylist()))
+            span += len(rg_counts)
+            counts.update(rg_counts)
+    if n_input_parts < target:
+        span = sum(min(r, target) for r in counts.values())
+    assert any(None in k for k in counts)
+    assert _driver_group_stats(paths, CFG, n_input_parts, target) == \
+        (len(counts), span)

@@ -1,18 +1,29 @@
 """Merge-tool, fold-table, and checkpoint/resume semantics (A13, A4, T1-T4)."""
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from kwage_spark.config import SketchConfig
 from kwage_spark.kernels import BloomParams
-from kwage_spark.kernels.registry import state_from_bytes
+from kwage_spark.kernels.bloom import BloomState
+from kwage_spark.kernels.cms import CMSState
+from kwage_spark.kernels.hll import HLLState
+from kwage_spark.kernels.kll import KLLState
+from kwage_spark.kernels.kmv import KMVState
+from kwage_spark.kernels.mg import MGState
+from kwage_spark.kernels.registry import merge_state_blobs, state_from_bytes
+from kwage_spark.kernels.tdigest import TDigestState
 from kwage_spark.operators.checkpoint import (
     resume_ingest, verify_manifest, write_checkpoint, read_checkpoint)
 from kwage_spark.operators.ingest import build_sketches
 from kwage_spark.operators.merge import (
-    fold_bloom_table, merge_sketch_tables, verify_states)
+    fold_bloom_table, merge_grouped_states, merge_sketch_tables,
+    merge_states_global, verify_states)
 from kwage_spark.sources.fixtures import make_source_files
+from kwage_spark.sources.store import compact_sketch_store, write_sketch_store
 
 CFG = SketchConfig(bloom=BloomParams(k=8, log2_m=14, num_hash=3),
                    kinds=("bloom", "hll", "cms"))
@@ -222,3 +233,141 @@ def test_corrupt_manifest_fails_loudly_not_cold_start(spark, corpus, tmp_path):
     with pytest.raises(Exception) as ei:
         resume_ingest(spark, corpus, CFG, ck).collect()
     assert "cold" not in str(ei.value).lower()
+
+
+# merges whose result bytes do not depend on the order of a group's partials
+ORDER_FREE = ("bloom", "hll", "cms", "kmv")
+ALL_KINDS = ORDER_FREE + ("kll", "tdigest", "mg")
+PARTIAL_SCHEMA = ("repo string, lang string, kind string, state binary, "
+                  "n_rows long, n_kgrams long, meta map<string,string>")
+
+
+def _kind_state(kind, rng) -> bytes:
+    H = rng.integers(0, 1 << 32, size=(40, 4), dtype=np.uint32)
+    v = rng.normal(size=40)
+    return {"bloom": lambda: BloomState(CFG.bloom).add_hashes(H[:, :3]),
+            "hll": lambda: HLLState(8).add_hash_lanes(H),
+            "cms": lambda: CMSState(6, 4).add_hashes(H),
+            "kmv": lambda: KMVState(16).add_hash_lanes(H),
+            "kll": lambda: KLLState(16).add_values(v),
+            "tdigest": lambda: TDigestState(20).add_values(v),
+            "mg": lambda: MGState(4).add_items(
+                [bytes([int(b)]) for b in H[:, 0] % 9]),
+            }[kind]().to_bytes()
+
+
+def _partial_rows(kinds, copies=1, distinct=1, n_groups=6, seed=0):
+    """Shuffled partial rows for ``n_groups`` (repo, lang) groups, the last
+    with a null lang: per group and kind, ``distinct`` different states,
+    each repeated ``copies`` times. A group's meta is the same on all its
+    rows, so first-row-wins is order-free."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for g in range(n_groups):
+        repo = f"org{g % 3}/repo{g // 3}"
+        lang = None if g == n_groups - 1 else f"lang{g % 2}"
+        for kind in kinds:
+            for d in range(distinct):
+                blob = _kind_state(kind, rng)
+                rows += [(repo, lang, kind, blob, d + 1, 10 * (d + 1),
+                          {"src": repo})] * copies
+    rng.shuffle(rows)
+    return rows
+
+
+def _reference_merge(rows) -> dict:
+    """Per-group merge_state_blobs of partial rows, on the driver."""
+    runs: dict = {}
+    for r in rows:
+        runs.setdefault(r[:3], []).append(r)
+    return {k: (merge_state_blobs([r[3] for r in rs]),
+                sum(r[4] for r in rs), sum(r[5] for r in rs), rs[0][6])
+            for k, rs in runs.items()}
+
+
+def _merged_rows(df) -> dict:
+    got = df.collect()
+    out = {(r["repo"], r["lang"], r["kind"]):
+           (bytes(r["state"]), r["n_rows"], r["n_kgrams"], r["meta"])
+           for r in got}
+    assert len(out) == len(got), "more than one row for a (group, kind)"
+    return out
+
+
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, n):
+    """Scope spark.sql.execution.arrow.maxRecordsPerBatch to ``n`` rows
+    (None leaves the session value)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("kinds,copies,distinct,n_groups,batch_rows", [
+    (ALL_KINDS, 1, 1, 6, None),    # one partial per group, every kind
+    (ALL_KINDS, 3, 1, 6, 2),       # equal partials: run order cannot matter
+    (ORDER_FREE, 1, 4, 6, None),   # many different partials per group
+    (ORDER_FREE, 2, 3, 6, 2),      # ... with runs split across Arrow batches
+    (("hll",), 2, 1, 700, None),   # more groups than one output batch
+    (("hll",), 1, 2, 700, 3),
+], ids=["one-per-group", "copies-split", "many-per-group",
+        "many-split", "wide", "wide-split"])
+def test_merge_grouped_states_matches_per_group_reference(
+        spark, kinds, copies, distinct, n_groups, batch_rows):
+    """The Arrow run merge returns, per (group, kind), the bytes of
+    merge_state_blobs over the group's partials, the summed counters and
+    the first row's other columns — in the input's schema."""
+    rows = _partial_rows(kinds, copies, distinct, n_groups)
+    partials = spark.createDataFrame(rows, PARTIAL_SCHEMA).repartition(3)
+    with _arrow_batch_rows(spark, batch_rows):
+        merged = merge_grouped_states(partials, ["repo", "lang"])
+        assert merged.schema == partials.schema
+        assert _merged_rows(merged) == _reference_merge(rows)
+
+
+def test_merge_states_global_matches_reference(spark):
+    """group_cols=[]: every kind's states fold into one row."""
+    rows = _partial_rows(ORDER_FREE, 1, 3)
+    df = spark.createDataFrame(rows, PARTIAL_SCHEMA).repartition(4)
+    with _arrow_batch_rows(spark, 2):
+        for kind in ORDER_FREE:
+            (out,) = merge_states_global(df, kind).collect()
+            mine = [r for r in rows if r[2] == kind]
+            assert bytes(out["state"]) == merge_state_blobs(
+                [r[3] for r in mine]), kind
+            assert out["n_rows"] == sum(r[4] for r in mine)
+            assert out["n_kgrams"] == sum(r[5] for r in mine)
+
+
+def test_compact_store_merges_appended_groups(spark, tmp_path):
+    """compact_sketch_store merges on (group…, _bucket, kind): two appends
+    of the same rows fold to the reference merge, bucket kept."""
+    rows = _partial_rows(ALL_KINDS)
+    sk = spark.createDataFrame(rows, PARTIAL_SCHEMA)
+    path = str(tmp_path / "store")
+    write_sketch_store(sk, path, "repo", buckets=4)
+    write_sketch_store(sk, path, "repo", buckets=4, mode="append")
+    with _arrow_batch_rows(spark, 2):
+        stats = compact_sketch_store(spark, path, group_cols=["repo", "lang"])
+    assert stats["buckets_compacted"] >= 1
+    store = spark.read.parquet(path)
+    assert _merged_rows(store) == _reference_merge(rows + rows)
+    rebucketed = store.withColumn(
+        "_want", F.pmod(F.xxhash64("repo"), F.lit(4)).cast("int"))
+    assert rebucketed.filter(F.col("_want") != F.col("_bucket")).count() == 0
+
+
+def test_merge_rejects_corrupt_partial(spark):
+    """Every state is decoded with its crc check, also a group's only one."""
+    rows = _partial_rows(("hll",))
+    bad = bytearray(rows[0][3])
+    bad[len(bad) // 2] ^= 0xFF
+    rows[0] = rows[0][:3] + (bytes(bad),) + rows[0][4:]
+    partials = spark.createDataFrame(rows, PARTIAL_SCHEMA)
+    with pytest.raises(Exception, match="crc32 mismatch"):
+        merge_grouped_states(partials, ["repo", "lang"]).collect()

@@ -38,6 +38,34 @@ def test_ingest_prunes_unused_columns(spark):
     assert "doc_id" not in rs and "n_chars" not in rs, rs
 
 
+def test_partial_build_merges_in_one_arrow_pass(spark):
+    """combine='partial' merges its partial states with one hash exchange
+    on (group cols, kind) between the partial MapInArrow and the merge
+    MapInArrow, and no per-group pandas call (FlatMapGroupsInPandas)."""
+    import re
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sk = build_sketches(docs, DOC_CFG, combine="partial")
+    plan = sk._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    assert "FlatMapGroupsInPandas" not in plan.toString(), plan.toString()
+    chain = []  # the merge MapInArrow down to the partial MapInArrow
+    node = plan
+    while node.nodeName() != "MapInArrow":
+        node = node.children().apply(0)
+    chain.append(node)
+    node = node.children().apply(0)
+    while node.nodeName() != "MapInArrow":
+        chain.append(node)
+        assert node.children().size() == 1, plan.toString()
+        node = node.children().apply(0)
+    exchanges = [re.sub(r"#\d+", "", n.outputPartitioning().toString())
+                 for n in chain if n.nodeName() == "Exchange"]
+    keys = ", ".join([*DOC_CFG.group_cols, "kind"])
+    assert len(exchanges) == 1, plan.toString()
+    assert exchanges[0].startswith(f"hashpartitioning({keys}, "), exchanges
+
+
 def test_search_has_no_shuffle(spark):
     """Query-time scan is partition-local: broadcast query + mapInPandas,
     zero shuffle exchanges before the final result sort (SURVEY §4.2)."""
