@@ -279,10 +279,12 @@ def kmv_group_overlap(sketches: DataFrame, group_col: str,
     SCALE BOUND: the pair join is inherently O(G²) in the number of
     groups — fine for strata (languages, sources: G ≤ 10³ → ≤ ~5·10⁵
     pairs), catastrophic for high-cardinality keys. The ``max_groups``
-    guard is enforced INSIDE the plan (a one-row count aggregate
-    cross-joined into the pair stage raises via assert_true at runtime)
-    so it costs no extra driver action; raise it deliberately only with
-    an all-pairs budget of max_groups²/2 pair rows in mind. For G beyond
+    guard is a DATA column, not a driver-side check: a one-row count
+    aggregate is broadcast-cross-joined into the pair stage and only the
+    scorer raises on its value, so it costs no extra driver action but
+    fires after the broadcast and the pair join have started; raise it
+    deliberately only with an all-pairs budget of max_groups²/2 pair
+    rows in mind. For G beyond
     the guard, restrict ``sketches`` to the strata of interest first, or
     compare against a fixed reference group (an O(G) join) instead of
     all pairs. NOTE: ``sketches`` is read three times (both join sides +
@@ -432,6 +434,13 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     extra = list(passthrough_cols or [])
+    taken = {"_toks", "_n", "_s", "chunk_idx", "n_chunk_tokens",
+             "chunk_text", id_col, text_col}
+    clash = sorted(set(extra) & taken)
+    if clash:
+        raise ValueError(
+            f"passthrough_cols {clash} collide with chunk_documents' "
+            f"working or output columns {sorted(taken)}")
     stride = chunk_tokens - overlap
     base = (df.select(F.col(id_col), *[F.col(c) for c in extra],
                       F.split(F.col(text_col), r"\s+").alias("_toks"))

@@ -92,7 +92,9 @@ def store_group_lookup(spark, sf_dir):
 def store_pruned_bloom_search(spark, sf_dir):
     """The reference's actual flagship shape: containment search over a
     PERSISTED, bucket-pruned sketch store read — not freshly built
-    in-memory sketches. Exact twin: exact_containment_flagship.
+    in-memory sketches. Exact twin: exact_containment_flagship; pytest
+    checks it against the in-memory search and ``exact_containment``
+    (tests/test_store.py).
 
     ``emit_all`` reports every scanned group's containment stats (the
     reference's --all CSV mode, `output.h:35-59`) so the flagship always

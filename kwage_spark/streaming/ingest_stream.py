@@ -3,9 +3,8 @@
 
 Design: each micro-batch runs the same map-side partial build as batch
 ingest and APPENDS partial sketch rows to a state dataset; because every
-sketch merge is associative+commutative, state compaction can happen
-lazily (on read, or via a periodic compaction job) with no correctness
-window. foreachBatch gives exactly-once appends per epoch via the file
+sketch merge is associative+commutative, the partials are folded
+lazily on read (``read_merged_state``) with no correctness window. foreachBatch gives exactly-once appends per epoch via the file
 committer; resume = just restart the stream with the same checkpoint.
 """
 
@@ -45,9 +44,3 @@ def read_merged_state(spark: SparkSession, state_dir: str,
     partials = spark.read.parquet(state_dir)
     return merge_grouped_states(partials, list(cfg.group_cols))
 
-
-def compact_state(spark: SparkSession, state_dir: str, cfg: SketchConfig,
-                  out_dir: str) -> None:
-    """Periodic compaction: rewrite the merged state (≙ merge_db pairwise
-    compaction loop, `merge_db.cpp:215-248`, in one shuffle)."""
-    read_merged_state(spark, state_dir, cfg).write.mode("overwrite").parquet(out_dir)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from jobs.curation_pipeline_job import run
@@ -123,3 +124,18 @@ def test_chunk_passthrough_carries_split_without_join(spark):
     assert a == b
     splits = {(r["doc_id"], r["split"]) for r in thru.collect()}
     assert splits == {(i, "train" if i % 2 else "test") for i in range(6)}
+
+
+@pytest.mark.parametrize("col", ["_toks", "_n", "_s",  # working columns
+                                 "chunk_idx", "n_chunk_tokens", "chunk_text",
+                                 "doc_id", "text"])    # id_col, text_col
+def test_chunk_passthrough_rejects_colliding_columns(spark, col):
+    """A passthrough column named like one of chunk_documents' working,
+    output, id or text columns would silently shadow or duplicate it;
+    it is rejected up front instead."""
+    from kwage_spark.operators.text import chunk_documents
+    df = spark.createDataFrame([(1, "a b c", "x")],
+                               "doc_id long, text string, split string")
+    with pytest.raises(ValueError, match="collide"):
+        chunk_documents(df, "doc_id", "text", chunk_tokens=4, overlap=1,
+                        passthrough_cols=["split", col])

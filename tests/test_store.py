@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +15,7 @@ from kwage_spark.operators.search import containment_search
 from kwage_spark.plans.inspect import physical_plan
 from kwage_spark.sources.fixtures import make_source_files
 from kwage_spark.sources.store import (
-    read_sketch_group, read_sketch_store, write_sketch_store)
+    MANIFEST, read_sketch_group, read_sketch_store, write_sketch_store)
 
 CFG = SketchConfig(bloom=BloomParams(k=8, log2_m=12, num_hash=3))
 
@@ -236,3 +239,183 @@ def test_store_roundtrip_through_scheme_uri(spark, tmp_path):
     one = read_sketch_group(spark, uri, "grp", "g2", buckets=8)
     assert one.count() == 8
     assert {r["grp"] for r in one.collect()} == {"g2"}
+
+
+# ------------------------------------------------ manifest and page layout
+def _new_jobs(spark, fn):
+    """(fn(), number of Spark jobs it started), via the status tracker."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def _session_confs(spark):
+    return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+
+
+def _old_layout_store(sk, path, group_col, buckets):
+    """A store as written before the manifest: the plain partitioned
+    writer, no sort, no page cap, no ``_kwage_store.json``."""
+    (sk.withColumn("_bucket", F.pmod(F.xxhash64(group_col), F.lit(buckets))
+                   .cast("int"))
+     .write.mode("overwrite").partitionBy("_bucket").parquet(path))
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def dense(spark, tmp_path_factory):
+    """~120 groups in 2 buckets from one input partition: every bucket
+    file holds many rows of each kind."""
+    pdf = make_source_files(n_repos=30, files_per_repo=8, tokens_per_file=30,
+                            seed=17)
+    sk = build_sketches(spark.createDataFrame(pdf), CFG).coalesce(1) \
+        .localCheckpoint(eager=True)
+    root = tmp_path_factory.mktemp("dense")
+    new, old = str(root / "new"), str(root / "old")
+    write_sketch_store(sk, new, "repo", buckets=2)
+    _old_layout_store(sk, old, "repo", 2)
+    return pdf, sk, new, old
+
+
+def test_manifest_read_starts_no_jobs_and_restores_confs(spark, dense,
+                                                          tmp_path):
+    """More bucket dirs than Spark's parallel-listing threshold (32), so
+    both discovery jobs would start without the manifest."""
+    _, sk, _, _ = dense
+    sk = sk.withColumn("g", F.concat_ws("/", "repo", "lang"))  # ~120 keys
+    g = sk.first()["g"]
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    write_sketch_store(sk, new, "g", buckets=48)
+    _old_layout_store(sk, old, "g", 48)
+    assert len(list(Path(new).glob("_bucket=*"))) > 32
+    assert (Path(new) / MANIFEST).exists() and not (Path(old) / MANIFEST).exists()
+    confs = _session_confs(spark)
+    _, jobs = _new_jobs(spark, lambda: read_sketch_store(spark, new))
+    assert jobs == 0
+    grp, jobs = _new_jobs(spark,
+                          lambda: read_sketch_group(spark, new, "g", g))
+    assert jobs == 0
+    assert _session_confs(spark) == confs
+    # buckets defaulted to the manifest's 48, so the lookup finds the group
+    assert {r["g"] for r in grp.collect()} == {g}
+    # the counter does see discovery work: the old layout lists its dirs
+    # and infers its schema from footers in jobs
+    _, jobs = _new_jobs(spark, lambda: read_sketch_store(spark, old))
+    assert jobs >= 2
+
+
+def test_bloom_first_pages_skip_other_kinds_at_the_scan(spark, dense):
+    """The pushed-down kind = 'bloom' filter meets the kind column's page
+    index: the scan emits fewer rows than the store holds, and the search
+    returns exactly what it returns over the old layout."""
+    from kwage_spark.plans.inspect import executed_nodes
+    pdf, sk, new, old = dense
+    queries = [(i, pdf.content[i * 37][:70]) for i in range(4)]
+    found = {}
+    for name, path in (("new", new), ("old", old)):
+        res = containment_search(read_sketch_store(spark, path), queries, CFG,
+                                 threshold=0.5)
+        found[name] = [tuple(r) for r in res.collect()]
+        scans = [m for n, m in executed_nodes(res) if n.startswith("Scan")]
+        found[name + "_scan"] = sum(m["numOutputRows"] for m in scans)
+    from kwage_spark.sources.store import _page_row_cap
+    total = sk.count()
+    n_bloom = sk.filter(F.col("kind") == "bloom").count()
+    n_files = len(list(Path(new).glob("_bucket=*/*.parquet")))
+    # the bloom rows plus at most one capped page of others per file
+    assert n_bloom <= found["new_scan"] <= (
+        n_bloom + n_files * _page_row_cap(len(sk.columns)))
+    assert found["old_scan"] == total > found["new_scan"]
+    assert found["new"] == found["old"] and found["new"]
+
+
+def test_store_without_manifest_reads_identically_and_compaction_migrates(
+        spark, dense, tmp_path):
+    import shutil
+    from kwage_spark.sources.store import compact_sketch_store
+    pdf, _, new, old = dense
+    path = str(tmp_path / "old")
+    shutil.copytree(old, path)
+    repo = pdf.repo[5]
+    want_all = _rows(read_sketch_store(spark, new))
+    want_one = _rows(read_sketch_group(spark, new, "repo", repo))
+    assert _rows(read_sketch_store(spark, path)) == want_all
+    assert _rows(read_sketch_group(spark, path, "repo", repo,
+                                   buckets=2)) == want_one
+
+    stats = compact_sketch_store(spark, path)
+    assert stats["buckets_compacted"] == 2  # every bucket re-laid out
+    manifest = json.loads((Path(path) / MANIFEST).read_text())
+    assert manifest["group_col"] is None and manifest["buckets"] is None
+    assert _rows(read_sketch_store(spark, path)) == want_all
+    assert _rows(read_sketch_group(spark, path, "repo", repo,
+                                   buckets=2)) == want_one
+    _, jobs = _new_jobs(spark, lambda: read_sketch_store(spark, path))
+    assert jobs == 0
+    again = compact_sketch_store(spark, path)
+    assert again["buckets_compacted"] == 0
+
+
+def test_manifest_rejects_conflicting_buckets_and_schema(spark, dense,
+                                                         tmp_path):
+    import shutil
+    from kwage_spark.sources.store import _bucket_file_counts
+    pdf, sk, new, _ = dense
+    with pytest.raises(ValueError, match=MANIFEST):
+        read_sketch_group(spark, new, "repo", pdf.repo[0], buckets=16)
+    path = str(tmp_path / "store")
+    shutil.copytree(new, path)
+    before = _bucket_file_counts(spark, path)
+    for bad, kw in ((sk.withColumn("extra", F.lit(1)), {"buckets": 2}),
+                    (sk.withColumn("n_rows", F.col("n_rows").cast("int")),
+                     {"buckets": 2}),
+                    (sk, {"buckets": 4})):
+        with pytest.raises(ValueError, match=MANIFEST):
+            write_sketch_store(bad, path, "repo", mode="append", **kw)
+    assert _bucket_file_counts(spark, path) == before
+    # a matching append (here: the store read back, all columns nullable)
+    # goes through
+    write_sketch_store(read_sketch_store(spark, new), path, "repo",
+                       buckets=2, mode="append")
+    assert read_sketch_store(spark, path).count() == 2 * sk.count()
+
+
+def test_store_pruned_bloom_search_matches_in_memory_and_exact(spark):
+    """Oracle for the persisted flagship: the bucket-pruned store read
+    returns what the in-memory search returns for src1, and a Bloom
+    filter never reports fewer k-grams than the exact count."""
+    from kwage_spark.operators.search import exact_containment
+    from kwage_spark.queries import FLAGSHIP_SNIPPET
+    from kwage_spark.queries_sketch import (DOC_CFG, STORE_GROUP,
+                                            doc_sketches,
+                                            store_pruned_bloom_search)
+    sf = "/root/testdata/sf0.001"
+    got = sorted(tuple(r) for r in store_pruned_bloom_search(spark, sf)
+                 .collect())
+    mem = doc_sketches(spark, sf).filter(F.col("source") == STORE_GROUP)
+    want = containment_search(mem, [(0, FLAGSHIP_SNIPPET)], DOC_CFG,
+                              threshold=0.3, emit_all=True)
+    assert got and got == sorted(tuple(r) for r in want.collect())
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet") \
+        .filter(F.col("source") == STORE_GROUP)
+    exact = {(r["source"], r["lang"]): r for r in exact_containment(
+        docs, [(0, FLAGSHIP_SNIPPET)], DOC_CFG).collect()}
+    k = DOC_CFG.k
+    n_grams = len({FLAGSHIP_SNIPPET[i:i + k]
+                   for i in range(len(FLAGSHIP_SNIPPET) - k + 1)})
+    cols = store_pruned_bloom_search(spark, sf).columns
+    for row in got:
+        r = dict(zip(cols, row))
+        e = exact.get((r["source"], r["lang"]))
+        assert r["num_kmers"] == n_grams
+        if e is not None:
+            assert r["num_kmers"] == e["num_kmers"]
+        assert r["num_kmers_found"] >= (e["num_kmers_found"] if e else 0)
