@@ -137,35 +137,6 @@ void mm3_rows_multiseed(const uint8_t *buf, int64_t n, int64_t width,
             out[i * nseeds + s] = mm3_body(buf + i * width, width, seeds[s]);
 }
 
-/* sliding multiseed over m variable-length strings packed in buf with m+1
-   offsets: window hashes of string i occupy rows [sum_j<i max(len_j-k+1,0),
-   ...) of out — i.e. per-string results concatenated, never crossing a
-   string boundary. */
-void mm3_sliding_batch_multiseed(const uint8_t *buf, const int64_t *offsets,
-                                 int64_t m, int64_t k,
-                                 const uint32_t *seeds, int64_t nseeds,
-                                 uint32_t *out) {
-    int64_t row = 0;
-    for (int64_t i = 0; i < m; i++) {
-        int64_t len = offsets[i + 1] - offsets[i];
-        int64_t n = len - k + 1;
-        if (n <= 0) continue;
-        mm3_sliding_multiseed(buf + offsets[i], len, k, seeds, nseeds,
-                              out + row * nseeds);
-        row += n;
-    }
-}
-
-/* murmur3_32 of m variable-length strings packed in buf with m+1 offsets. */
-void mm3_batch_multiseed(const uint8_t *buf, const int64_t *offsets,
-                         int64_t m, const uint32_t *seeds, int64_t nseeds,
-                         uint32_t *out) {
-    for (int64_t i = 0; i < m; i++)
-        for (int64_t s = 0; s < nseeds; s++)
-            out[i * nseeds + s] = mm3_body(
-                buf + offsets[i], offsets[i + 1] - offsets[i], seeds[s]);
-}
-
 /* sliding multiseed over m strings given as (start, len) ranges into a
    shared buffer — the ranges need not be contiguous or ordered (they
    address rows of an Arrow string column's data buffer directly). */
@@ -506,7 +477,6 @@ if os.environ.get("KWAGE_DISABLE_NATIVE", "") != "1":
         try:
             _lib = ctypes.CDLL(_so_path)
             for fn in ("mm3_sliding_multiseed", "mm3_rows_multiseed",
-                       "mm3_batch_multiseed", "mm3_sliding_batch_multiseed",
                        "mm3_sliding_ranges_multiseed",
                        "mm3_sliding_minhash", "mm3_sliding_ranges_minhash",
                        "bloom_scan_count",
@@ -543,14 +513,7 @@ if os.environ.get("KWAGE_DISABLE_NATIVE", "") != "1":
             _lib.mm3_sliding_multiseed.argtypes = [
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
-            _lib.mm3_sliding_batch_multiseed.argtypes = [
-                ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
-                ctypes.c_int64, ctypes.c_void_p, ctypes.c_int64,
-                ctypes.c_void_p]
             _lib.mm3_rows_multiseed.argtypes = [
-                ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
-                ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
-            _lib.mm3_batch_multiseed.argtypes = [
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
                 ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
             HAVE_NATIVE = True
@@ -581,23 +544,6 @@ def rows_multiseed(rows: np.ndarray, seeds: np.ndarray) -> np.ndarray:
     if n > 0:
         _lib.mm3_rows_multiseed(
             rows.ctypes.data, n, width,
-            seeds.ctypes.data, seeds.shape[0], out.ctypes.data)
-    return out
-
-
-def sliding_batch_multiseed(buf: np.ndarray, offsets: np.ndarray, k: int,
-                            seeds: np.ndarray) -> np.ndarray:
-    """Concatenated per-string sliding-window hashes (no boundary windows).
-    Returns (sum_i max(len_i-k+1, 0), nseeds) uint32 — native path."""
-    buf = np.ascontiguousarray(buf, dtype=np.uint8)
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    seeds = np.ascontiguousarray(seeds, dtype=np.uint32)
-    lens = np.diff(offsets)
-    n_out = int(np.maximum(lens - k + 1, 0).sum())
-    out = np.empty((n_out, seeds.shape[0]), dtype=np.uint32)
-    if n_out > 0:
-        _lib.mm3_sliding_batch_multiseed(
-            buf.ctypes.data, offsets.ctypes.data, offsets.shape[0] - 1, k,
             seeds.ctypes.data, seeds.shape[0], out.ctypes.data)
     return out
 
@@ -755,19 +701,4 @@ def sliding_ranges_multiseed(buf: np.ndarray, starts: np.ndarray,
             buf.ctypes.data, starts.ctypes.data, lens.ctypes.data,
             starts.shape[0], k, seeds.ctypes.data, seeds.shape[0],
             out.ctypes.data)
-    return out
-
-
-def batch_multiseed(buf: np.ndarray, offsets: np.ndarray,
-                    seeds: np.ndarray) -> np.ndarray:
-    """(m, nseeds) uint32 for m packed variable-length strings."""
-    buf = np.ascontiguousarray(buf, dtype=np.uint8)
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    seeds = np.ascontiguousarray(seeds, dtype=np.uint32)
-    m = offsets.shape[0] - 1
-    out = np.empty((max(m, 0), seeds.shape[0]), dtype=np.uint32)
-    if m > 0:
-        _lib.mm3_batch_multiseed(
-            buf.ctypes.data, offsets.ctypes.data, m,
-            seeds.ctypes.data, seeds.shape[0], out.ctypes.data)
     return out

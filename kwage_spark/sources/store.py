@@ -24,6 +24,12 @@ discovery work:
   the ``state`` pages of every other kind (most store bytes are CMS
   state). The files, the ``_bucket=N`` dirs and a plain
   ``spark.read.parquet`` are unchanged.
+* **One file per bucket.** An overwrite and a compaction exchange the
+  rows on ``_bucket`` before the write, so each bucket dir holds one data
+  file (``target_files_per_bucket`` for a compaction) and a scan opens
+  as few files as there are buckets. An append adds no exchange: it
+  writes one file wave per (task, bucket), which ``compact_sketch_store``
+  folds back to one file per bucket.
 * **Old stores.** A store without a manifest is read exactly as before
   (listing and schema inference); ``compact_sketch_store`` migrates it
   by rewriting every bucket in the new layout and writing a manifest.
@@ -161,6 +167,17 @@ def _check_manifest(path: str, manifest: dict, what: str, group_col: str,
                          f"from {where} ({want.simpleString()})")
 
 
+def _pack_buckets(df: DataFrame, files_per_bucket: int = 1) -> DataFrame:
+    """Hash-exchange ``df``'s rows on ``_bucket`` (and on one of
+    ``files_per_bucket`` slots), so a bucket's rows reach one write task
+    and the writer leaves one file per bucket (per slot)."""
+    if files_per_bucket <= 1:
+        return df.repartition(F.col(BUCKET_COL))
+    slot = F.pmod(F.xxhash64(*[c for c in df.columns if c != "state"][:3]),
+                  F.lit(files_per_bucket))
+    return df.repartition(F.col(BUCKET_COL), slot)
+
+
 def _write_bucketed(df: DataFrame, path: str, mode: str) -> None:
     """Write ``df`` (with ``_bucket``) as one parquet file wave per bucket.
     Sketch rows go bloom first, then the other kinds by state width, in
@@ -198,6 +215,10 @@ def write_sketch_store(sketches: DataFrame, path: str, group_col: str,
     ~64 buckets keeps files large at 100 TB-derived sketch volumes while
     making single-group reads touch 1/64th of the data (≙ KWAGE's ≤2048
     filters/file packing, `options.h:137-138`, but pruned by layout).
+    Every mode but ``'append'`` first exchanges the rows on their bucket,
+    so the write leaves one file per bucket and at most ``buckets`` write
+    tasks hold rows. An append writes without that exchange, one file
+    wave per (task, bucket), for ``compact_sketch_store`` to fold.
 
     Parquet stores are written bloom-first in row-capped pages and carry
     a ``_kwage_store.json`` manifest (module docstring). An overwrite, or
@@ -234,6 +255,8 @@ def write_sketch_store(sketches: DataFrame, path: str, group_col: str,
                         group_col, buckets, schema)
     fresh = overwrite or (manifest is None
                           and not _bucket_file_counts(spark, path))
+    if mode.lower() != "append":
+        out = _pack_buckets(out)
     _write_bucketed(out, path, mode)
     if fresh:
         _write_manifest(spark, path, schema, group_col, buckets)
@@ -340,7 +363,9 @@ def compact_sketch_store(spark: SparkSession, path: str,
     Only OVER-FRAGMENTED buckets (more data files than
     ``target_files_per_bucket``) are rewritten, via dynamic partition
     overwrite — already-compact buckets are untouched and the call is a
-    no-op on a compact store. A store without a manifest is migrated:
+    no-op on a compact store, which is what a fresh overwrite leaves
+    (one file per bucket), so after appends only the buckets they touched
+    are rewritten. A store without a manifest is migrated:
     every bucket is rewritten in the bloom-first layout and a manifest is
     written (module docstring). When ``group_cols`` is given, duplicate
     (group…, kind) rows from incremental appends of the SAME group are
@@ -369,16 +394,10 @@ def compact_sketch_store(spark: SparkSession, path: str,
         df = merge_grouped_states(df, [*group_cols, BUCKET_COL]) \
             if BUCKET_COL not in group_cols else merge_grouped_states(
                 df, group_cols)
-    if target_files_per_bucket <= 1:
-        packed = df.repartition(F.col(BUCKET_COL))
-    else:
-        slot = F.pmod(F.xxhash64(*[c for c in df.columns
-                                   if c != "state"][:3]),
-                      F.lit(target_files_per_bucket))
-        packed = df.repartition(F.col(BUCKET_COL), slot)
     # cut the plan's file-source dependency so the overwrite of the path
     # being read is legal; blocks stay on executors (only hot buckets)
-    packed = packed.localCheckpoint(eager=True)
+    packed = _pack_buckets(df, target_files_per_bucket) \
+        .localCheckpoint(eager=True)
 
     with _session_conf(spark, "spark.sql.sources.partitionOverwriteMode",
                        "dynamic"):

@@ -303,22 +303,6 @@ def test_native_kernel_parity_with_numpy():
         _native.HAVE_NATIVE = True
 
 
-def test_native_batch_multiseed_variable_lengths():
-    from kwage_spark.kernels import _native
-    from kwage_spark.kernels.murmur3 import murmur3_32
-    if not _native.HAVE_NATIVE:
-        import pytest
-        pytest.skip("no C compiler in this environment")
-    strings = [b"", b"a", b"abcd", b"hello world", RNG.bytes(100)]
-    buf = np.frombuffer(b"".join(strings), dtype=np.uint8)
-    offsets = np.cumsum([0] + [len(s) for s in strings]).astype(np.int64)
-    seeds = np.asarray([0, 3], dtype=np.uint32)
-    out = _native.batch_multiseed(buf, offsets, seeds)
-    for i, s in enumerate(strings):
-        for j, seed in enumerate((0, 3)):
-            assert out[i, j] == murmur3_32(s, seed), (i, seed)
-
-
 def test_native_sketch_updates_match_numpy():
     """bloom_scatter / hll_update / cms_update vs the numpy fallbacks."""
     from kwage_spark.kernels import _native
@@ -347,21 +331,6 @@ def test_native_sketch_updates_match_numpy():
     assert np.array_equal(a, b)
     a, b = both(lambda: CMSState(9, 4).add_hashes(H).table)
     assert np.array_equal(a, b)
-
-
-def test_batch_sliding_matches_per_row():
-    from kwage_spark.kernels.murmur3 import (
-        murmur3_32_sliding, murmur3_32_sliding_batch)
-    seeds = np.arange(3, dtype=np.uint32)
-    raws = [bytes(RNG.bytes(int(n))) for n in RNG.integers(0, 64, size=30)]
-    raws += [b"", b"short", RNG.bytes(500)]
-    got = murmur3_32_sliding_batch(raws, 8, seeds)
-    parts = [murmur3_32_sliding(np.frombuffer(r, dtype=np.uint8), 8, seeds)
-             for r in raws]
-    want = np.concatenate([pp for pp in parts if pp.shape[0]]) \
-        if any(pp.shape[0] for pp in parts) else np.empty((0, 3), np.uint32)
-    assert np.array_equal(got, want)
-    assert murmur3_32_sliding_batch([], 8, seeds).shape == (0, 3)
 
 
 def test_tdigest_quantiles_vs_exact():

@@ -419,3 +419,69 @@ def test_store_pruned_bloom_search_matches_in_memory_and_exact(spark):
         if e is not None:
             assert r["num_kmers"] == e["num_kmers"]
         assert r["num_kmers_found"] >= (e["num_kmers_found"] if e else 0)
+
+
+# ------------------------------------------------ one file per bucket
+@pytest.fixture(scope="module")
+def spread(spark):
+    """Sketches of 40 repos from a 7-partition input, checkpointed so every
+    write below sees the same rows in the same several partitions."""
+    pdf = make_source_files(n_repos=40, files_per_repo=3, tokens_per_file=30,
+                            seed=29)
+    sk = build_sketches(spark.createDataFrame(pdf).repartition(7), CFG) \
+        .localCheckpoint(eager=True)
+    assert sk.rdd.getNumPartitions() > 1
+    return pdf, sk
+
+
+@pytest.mark.parametrize("shuffle_partitions", [3, 32])
+def test_overwrite_writes_one_file_per_bucket(spark, spread, tmp_path,
+                                              shuffle_partitions):
+    """An overwrite exchanges rows on _bucket before the write, below and
+    above the bucket count alike, so it leaves the compact layout; an
+    append adds no exchange and leaves file waves for compaction."""
+    from kwage_spark.sources.store import (_bucket_file_counts,
+                                           _session_conf,
+                                           compact_sketch_store)
+    _, sk = spread
+    path = str(tmp_path / "store")
+    with _session_conf(spark, "spark.sql.shuffle.partitions",
+                       str(shuffle_partitions)):
+        write_sketch_store(sk, path, "repo", buckets=16)
+    counts = _bucket_file_counts(spark, path)
+    assert len(counts) > 1 and set(counts.values()) == {1}, counts
+    assert compact_sketch_store(spark, path)["buckets_compacted"] == 0
+    assert _rows(read_sketch_store(spark, path)) == _rows(sk)
+
+    write_sketch_store(sk, path, "repo", buckets=16, mode="append")
+    appended = _bucket_file_counts(spark, path)
+    assert max(appended.values()) > 1, appended
+    stats = compact_sketch_store(spark, path)
+    assert stats["buckets_compacted"] == sum(n > 1 for n in appended.values())
+    assert set(_bucket_file_counts(spark, path).values()) == {1}
+    assert _rows(read_sketch_store(spark, path)) == sorted(_rows(sk) * 2)
+
+
+def test_packed_store_search_matches_unpacked_and_in_memory(spark, spread,
+                                                            tmp_path):
+    """The packing exchange changes files, not results: an ordered search
+    over the packed store returns the rows, in order, of one over the
+    same sketches written without the exchange and of one in memory."""
+    from kwage_spark.sources.store import (_bucket_file_counts, _with_bucket,
+                                           _write_bucketed)
+    pdf, sk = spread
+    packed, unpacked = str(tmp_path / "packed"), str(tmp_path / "unpacked")
+    write_sketch_store(sk, packed, "repo", buckets=16)
+    _write_bucketed(_with_bucket(sk, "repo", 16), unpacked, "overwrite")
+    assert (sum(_bucket_file_counts(spark, unpacked).values())
+            > sum(_bucket_file_counts(spark, packed).values()))
+    queries = [(i, pdf.content[i * 23][:70]) for i in range(5)]
+
+    def search(df):
+        return [tuple(r) for r in containment_search(
+            df, queries, CFG, threshold=0.5, ordered=True).collect()]
+
+    want = search(sk)
+    assert want
+    assert search(read_sketch_store(spark, packed)) == want
+    assert search(spark.read.parquet(unpacked).drop("_bucket")) == want
