@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..kernels.murmur3 import murmur3_32_multiseed
 from ..kernels.shingle import windows_of
 from .caching import persist_tracked
-from .util import ensure_parallelism
+from .util import cosine, ensure_parallelism
 
 logger = logging.getLogger(__name__)
 
@@ -362,6 +362,45 @@ def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
 
 
 # ------------------------------------------------------- embedding near-dup
+def hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    """The (n_planes, dim) Gaussian hyperplanes: a pure function of
+    (HYPERPLANE_SEED, dim, n_planes), so bucketing and probing agree."""
+    return np.random.default_rng(HYPERPLANE_SEED).standard_normal(
+        (n_planes, dim))
+
+
+def hyperplane_bucket_udf(n_planes: int):
+    """pandas UDF: an array column → its hyperplane sign pattern (long).
+
+    The planes are derived EXECUTOR-side from the batch's vector length,
+    so callers need no eager ``.first()`` dimension probe and no driver
+    broadcast. They are derived once per task, and a task that sees a
+    second dim raises: a ragged column would otherwise bucket different
+    batches under different plane sets. Dims that differ across tasks are
+    the caller's to catch (``build_vector_index`` observes them)."""
+    planes_by_dim: dict[int, np.ndarray] = {}
+
+    @F.pandas_udf("long")
+    def bucket_of(vecs: pd.Series) -> pd.Series:
+        if not len(vecs):
+            return pd.Series([], dtype="int64")
+        mat = np.stack(vecs.to_numpy())
+        dim = mat.shape[1]
+        p = planes_by_dim.get(dim)
+        if p is None:
+            if planes_by_dim:
+                raise ValueError(
+                    f"hyperplane bucketing saw vectors of dim {dim} after "
+                    f"dim {next(iter(planes_by_dim))}: the embedding "
+                    "column is ragged; fix the input — buckets would "
+                    "silently come from different plane sets")
+            p = planes_by_dim[dim] = hyperplanes(dim, n_planes)
+        signs = (mat @ p.T) > 0
+        return pd.Series((signs * (1 << np.arange(p.shape[0]))).sum(axis=1)
+                         .astype(np.int64))
+    return bucket_of
+
+
 def embedding_near_duplicates(df: DataFrame, id_col: str = "vec_id",
                               vec_col: str = "embedding",
                               threshold: float = 0.95,
@@ -377,23 +416,11 @@ def embedding_near_duplicates(df: DataFrame, id_col: str = "vec_id",
     (logged); the bucketed-row cache is registered with
     ``operators.caching``.
 
-    The hyperplanes are a pure function of (HYPERPLANE_SEED, dim), so
-    they are generated EXECUTOR-side from each Arrow batch's vector
-    length — no eager ``.first()`` dimension probe at construction (the
-    r4-flagged extra pre-action job) and no driver broadcast; an empty
+    The buckets come from ``hyperplane_bucket_udf`` (the vector index's
+    LSH assigner): no eager dimension probe at construction, and an empty
     input simply yields an empty result through the same plan.
     """
-    @F.pandas_udf("long")
-    def bucket_of(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="int64")
-        mat = np.stack(vecs.to_numpy())            # (n, dim)
-        rng = np.random.default_rng(HYPERPLANE_SEED)
-        p = rng.standard_normal((n_planes, mat.shape[1]))
-        signs = (mat @ p.T) > 0                     # (n, n_planes)
-        return pd.Series((signs * (1 << np.arange(p.shape[0]))).sum(axis=1)
-                         .astype(np.int64))
-
+    bucket_of = hyperplane_bucket_udf(n_planes)
     keyed = df.select(id_col, vec_col).withColumn("bucket", bucket_of(F.col(vec_col)))
     if max_bucket is not None:
         # persisted (tracked): the self-join reads keyed on both sides —
@@ -403,17 +430,9 @@ def embedding_near_duplicates(df: DataFrame, id_col: str = "vec_id",
                                  "embedding_near_duplicates",
                                  audit=bucket_audit)
     a, b = keyed.alias("a"), keyed.alias("b")
-    dot = F.expr(f"aggregate(zip_with(a.{vec_col}, b.{vec_col},"
-                 " (x, y) -> cast(x as double) * cast(y as double)),"
-                 " cast(0.0 as double), (acc, v) -> acc + v)")
-
-    def nrm(side: str):
-        return F.expr(f"sqrt(aggregate({side}.{vec_col}, cast(0.0 as double),"
-                      " (acc, x) -> acc + cast(x as double) * cast(x as double)))")
-
     return (a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .withColumn("cosine", dot / (nrm("a") * nrm("b")))
+            .withColumn("cosine", cosine(f"a.{vec_col}", f"b.{vec_col}"))
             .filter(F.col("cosine") >= threshold)
             .select(F.col(f"a.{id_col}").alias("id_a"),
                     F.col(f"b.{id_col}").alias("id_b"),

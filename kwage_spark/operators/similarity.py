@@ -1,140 +1,68 @@
 """Similarity search over an embedding column (array<float>).
 
-Baseline: brute-force cosine top-k — pure built-ins (zip_with/aggregate),
-whole-stage-codegen'd, broadcast query vector; O(n) scan, the correct
-plan when no index exists. Scale path: random-hyperplane LSH bucketing
-with multi-probe (flip each plane once => n_planes+1 probe buckets), which
-turns the scan into a bucket-pruned candidate re-rank; recall tested
-against the brute-force oracle.
+* ``cosine_topk`` is the exact baseline: brute-force cosine (built-in
+  zip_with / aggregate, whole-stage codegen, broadcast query vector), an
+  O(n) scan and the right plan when no index exists. Every index probe
+  re-ranks its candidates with it.
+* ``build_vector_index`` / ``vector_topk`` are one partitioned vector
+  index. The build gives every row a partition id and writes the rows
+  ``partitionBy`` it; a probe turns its probe set into a partition filter
+  (PartitionFilters in the plan), so the scan reads only those
+  directories, and re-ranks what it reads exactly. Two assigners:
+
+  - ``assign="lsh"``: the sign pattern of seeded random hyperplanes
+    (column ``bucket``); a probe reads the query's bucket plus its
+    ``n_planes`` one-bit flips.
+  - ``assign="ivf"``: the nearest of ``k`` learned centroids
+    (``kmeans_centroids``, column ``centroid``); a probe reads the
+    ``nprobe`` nearest lists.
+
+  and two storages: ``"float"`` keeps (id, vector); ``"int8"`` keeps
+  ``quantize_embeddings`` output (id, scale, qvec), assigns on the
+  dequantized values and dequantizes on read inside the scan.
+* The build writes a ``_vector_index.json`` sidecar at the index root
+  (through the sketch store's JSON sidecar I/O): layout version,
+  assigner, storage, dim, ``n_planes`` or the centroid matrix, the id and
+  vector column names and the data files' Spark schema. A probe takes
+  everything that must match the build from it, reads the data with its
+  schema and lists the partition dirs on the driver, so building the
+  probe's DataFrame starts no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .dedup import HYPERPLANE_SEED
+from ..sources.store import _read_manifest, _read_parquet, _write_manifest
+from .dedup import hyperplane_bucket_udf, hyperplanes
+from .util import cosine
 
 logger = logging.getLogger(__name__)
 
-
-def _cos_cols(vec_col: str, qv_col: str = "qv"):
-    dot = F.expr(f"aggregate(zip_with({vec_col}, {qv_col},"
-                 " (x, y) -> cast(x as double) * cast(y as double)),"
-                 " cast(0.0 as double), (acc, v) -> acc + v)")
-    nrm = F.expr(f"sqrt(aggregate({vec_col}, cast(0.0 as double),"
-                 " (acc, x) -> acc + cast(x as double) * cast(x as double)))")
-    qnrm = F.expr(f"sqrt(aggregate({qv_col}, cast(0.0 as double),"
-                  " (acc, x) -> acc + cast(x as double) * cast(x as double)))")
-    return dot / (nrm * qnrm)
+SIDECAR = "_vector_index.json"
+LAYOUT_VERSION = 1
+DEFAULT_NPROBE = 4
+#: the partition column each assigner writes
+PARTITION_COL = {"lsh": "bucket", "ivf": "centroid"}
 
 
 def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Brute-force cosine top-k (the exact baseline)."""
-    spark = df.sparkSession
-    q = spark.createDataFrame([(query_vec,)], f"qv array<float>")
+    q = df.sparkSession.createDataFrame([(list(map(float, query_vec)),)],
+                                        "qv array<float>")
     return (df.crossJoin(F.broadcast(q))
-            .withColumn("cosine", _cos_cols(vec_col))
+            .withColumn("cosine", cosine(vec_col, "qv"))
             .orderBy(F.desc("cosine"), id_col)
             .select(id_col, F.round("cosine", 5).alias("cosine"))
             .limit(k))
-
-
-def lsh_plan_buckets(spark, dim: int, n_planes: int = 10):
-    rng = np.random.default_rng(HYPERPLANE_SEED)
-    return rng.standard_normal((n_planes, dim))
-
-
-def _bucket_udf(spark, planes: np.ndarray):
-    bp = spark.sparkContext.broadcast(planes)
-
-    @F.pandas_udf("long")
-    def bucket_of(vecs: pd.Series) -> pd.Series:
-        p = bp.value
-        mat = np.stack(vecs.to_numpy())
-        signs = (mat @ p.T) > 0
-        return pd.Series((signs * (1 << np.arange(p.shape[0]))).sum(axis=1)
-                         .astype(np.int64))
-    return bucket_of
-
-
-def _bucket_udf_lazy(n_planes: int):
-    """Bucket UDF that derives the hyperplanes EXECUTOR-side from each
-    Arrow batch's vector length — planes are a pure function of
-    (HYPERPLANE_SEED, dim), so index writers need no eager ``.first()``
-    dimension probe (an extra pre-action job at construction) and no
-    driver broadcast; probe-side code regenerates the identical planes
-    from len(query_vec)."""
-    planes_by_dim: dict[int, np.ndarray] = {}
-
-    @F.pandas_udf("long")
-    def bucket_of(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="int64")
-        mat = np.stack(vecs.to_numpy())
-        dim = mat.shape[1]
-        # r6 (guide §4.5 + r5 advice): derive the plane matrix ONCE per
-        # (worker, dim) instead of re-running the Gaussian RNG on every
-        # Arrow batch, and fail loudly if a ragged vector column ever
-        # presents a second dim — the old per-batch derivation would
-        # silently bucket different batches under different plane sets.
-        p = planes_by_dim.get(dim)
-        if p is None:
-            if planes_by_dim:
-                raise ValueError(
-                    f"hyperplane bucketing saw vectors of dim {dim} after "
-                    f"dim {next(iter(planes_by_dim))}: the embedding "
-                    "column is ragged; fix the input — buckets would "
-                    "silently come from different plane sets")
-            rng = np.random.default_rng(HYPERPLANE_SEED)
-            p = rng.standard_normal((n_planes, dim))
-            planes_by_dim[dim] = p
-        signs = (mat @ p.T) > 0
-        return pd.Series((signs * (1 << np.arange(p.shape[0]))).sum(axis=1)
-                         .astype(np.int64))
-    return bucket_of
-
-
-def _probe_buckets(query_vec, planes: np.ndarray) -> list[int]:
-    """Multi-probe set: the query's bucket plus every 1-bit flip."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qsig = int(((qv @ planes.T) > 0) @ (1 << np.arange(planes.shape[0])))
-    return [qsig] + [qsig ^ (1 << i) for i in range(planes.shape[0])]
-
-
-def _rerank_topk(cands: DataFrame, query_vec, k: int,
-                 id_col: str, vec_col: str) -> DataFrame:
-    q = cands.sparkSession.createDataFrame([(list(map(float, query_vec)),)],
-                                           "qv array<float>")
-    return (cands.crossJoin(F.broadcast(q))
-            .withColumn("cosine", _cos_cols(vec_col))
-            .orderBy(F.desc("cosine"), id_col)
-            .select(id_col, F.round("cosine", 5).alias("cosine"))
-            .limit(k))
-
-
-def ann_topk_lsh(df: DataFrame, query_vec: list[float], k: int = 10,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_planes: int = 10) -> DataFrame:
-    """Approximate top-k: hyperplane-bucket candidates (multi-probe: the
-    query's bucket plus every 1-bit flip), exact cosine re-rank within.
-
-    Inline form — the bucket UDF runs over the full scan. For the 100-TB
-    path precompute the layout once with build_ann_index and query with
-    ann_topk_indexed, which prunes partitions at the scan.
-    """
-    qv = np.asarray(query_vec, dtype=np.float64)
-    planes = lsh_plan_buckets(df.sparkSession, qv.shape[0], n_planes)
-    bucket_of = _bucket_udf(df.sparkSession, planes)
-    probes = _probe_buckets(query_vec, planes)
-    cands = (df.withColumn("bucket", bucket_of(F.col(vec_col)))
-             .filter(F.col("bucket").isin(probes)))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
 
 
 def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
@@ -157,7 +85,7 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
     seed_rows = (df.orderBy(id_col).limit(k)
                  .select(vec_col).collect())
     if not seed_rows:
-        raise ValueError("cannot cluster an empty table")
+        raise ValueError("cannot index an empty table")
     if len(seed_rows) < k:
         # fewer vectors than requested clusters: clamp k so the
         # quantizer stays well-defined; the sidecar then records the
@@ -206,97 +134,6 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
     return cents
 
 
-def build_ivf_index(df: DataFrame, path: str, id_col: str = "vec_id",
-                    vec_col: str = "embedding", k: int = 16,
-                    iters: int = 8) -> np.ndarray:
-    """IVF layout with LEARNED centroids: k-means coarse quantizer, rows
-    written partitioned by nearest-centroid id, centroid matrix stored as
-    a sidecar table. An nprobe query reads nprobe of k partition
-    directories (PartitionFilters) — the literal IVF-Flat structure.
-    Returns the centroid matrix (also persisted at {path}/_centroids)."""
-    cents = kmeans_centroids(df, vec_col, k, iters, id_col)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("int")
-    def cluster_of(vecs: pd.Series) -> pd.Series:
-        c = bc.value
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (m @ c.T)
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-    (df.select(id_col, vec_col)
-     .withColumn("centroid", cluster_of(F.col(vec_col)))
-     .write.mode("overwrite").partitionBy("centroid")
-     .parquet(f"{path}/vectors"))
-    cent_rows = [(i, row.tolist()) for i, row in enumerate(cents)]
-    (spark.createDataFrame(cent_rows, "centroid int, cvec array<double>")
-     .coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids"))
-    return cents
-
-
-def ivf_topk(spark, path: str, query_vec: list[float], topk: int = 10,
-             nprobe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Query a build_ivf_index layout: rank centroids driver-side (a
-    k-row sidecar read), scan only the nprobe nearest inverted lists via
-    a PARTITION filter, exact-cosine re-rank inside. Recall rises with
-    nprobe and hits 1.0 at nprobe >= the sidecar's EFFECTIVE k (its row
-    count — see kmeans_centroids clamping), where the scan degenerates
-    to brute force."""
-    cents_rows = spark.read.parquet(f"{path}/_centroids").collect()
-    if not cents_rows:
-        raise ValueError(
-            f"IVF centroid sidecar at {path}/_centroids is empty or "
-            "missing — build the index with build_ivf_index first")
-    cents = np.zeros((len(cents_rows), len(cents_rows[0]["cvec"])))
-    for r in cents_rows:
-        cents[r["centroid"]] = r["cvec"]
-    qv = np.asarray(query_vec, dtype=np.float64)
-    d2 = (cents * cents).sum(axis=1) - 2.0 * (cents @ qv)
-    probes = [int(i) for i in np.argsort(d2)[:nprobe]]
-    cands = (spark.read.parquet(f"{path}/vectors")
-             .filter(F.col("centroid").isin(probes)))
-    return _rerank_topk(cands, query_vec, topk, id_col, vec_col)
-
-
-def build_ann_index(df: DataFrame, path: str, id_col: str = "vec_id",
-                    vec_col: str = "embedding", n_planes: int = 10) -> None:
-    """Materialize the hyperplane-bucketed ANN layout: rows written
-    partitioned by their bucket (hive layout), so a probe reads only
-    n_planes+1 of 2^n_planes partition directories. The planes are a pure
-    function of (HYPERPLANE_SEED, dim), so index and probe always agree —
-    they are generated executor-side per Arrow batch, so the build is ONE
-    write job with no eager dimension-probe job before it. An empty input
-    is detected from the written layout (an FS listing, not a Spark job)
-    and raises, since a partition-less parquet dir cannot be read back."""
-    bucket_of = _bucket_udf_lazy(n_planes)
-    (df.select(id_col, vec_col)
-     .withColumn("bucket", bucket_of(F.col(vec_col)))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-    jvm = df.sparkSession._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(df.sparkSession._jsc.hadoopConfiguration())
-    if not any(c.getPath().getName().startswith("bucket=")
-               for c in fs.listStatus(p)):
-        raise ValueError("cannot index an empty table")
-
-
-def ann_topk_indexed(spark, path: str, query_vec: list[float], k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     n_planes: int = 10) -> DataFrame:
-    """Query a build_ann_index layout: the bucket .isin(probes) predicate
-    is a PARTITION filter (verify PartitionFilters in the plan), so the
-    scan touches (n_planes+1)/2^n_planes of the index, then re-ranks
-    exactly — the Spark analog of an IVF probe."""
-    df = spark.read.parquet(path)
-    dim = len(query_vec)
-    planes = lsh_plan_buckets(spark, dim, n_planes)
-    probes = _probe_buckets(query_vec, planes)
-    cands = df.filter(F.col("bucket").isin(probes))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
-
-
 # ------------------------------------------------------- int8 quantization
 def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
@@ -326,62 +163,147 @@ def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
                       qvec.alias("qvec"))
 
 
+def _dequantized(dtype: str = "float") -> Column:
+    """q_i · scale of a ``quantize_embeddings`` row, cast to ``dtype``."""
+    return F.expr(f"transform(qvec, q -> cast(q * scale as {dtype}))")
+
+
 def dequantize_embeddings(qdf: DataFrame, id_col: str = "vec_id",
                           vec_col: str = "embedding") -> DataFrame:
     """(id, scale, qvec) → (id, embedding array<float>): q_i · scale,
-    cast back to float32 — feed straight into cosine_topk / the ANN
-    index builders."""
-    return qdf.select(
-        F.col(id_col),
-        F.expr("transform(qvec, q -> cast(q * scale as float))")
-        .alias(vec_col))
+    cast back to float32 — feed straight into cosine_topk or
+    build_vector_index."""
+    return qdf.select(F.col(id_col), _dequantized().alias(vec_col))
 
 
-def build_ann_index_quantized(df: DataFrame, path: str,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding",
-                              n_planes: int = 10) -> None:
-    """Hyperplane-bucketed ANN layout over the INT8 store: rows are
-    quantized first (scale + qvec — the 4× smaller representation the
-    embedding store actually holds at 100-TB volumes), bucketed by the
-    sign pattern of their dequantized vectors, and written partitioned
-    by bucket. The float copy is never persisted: at scale the int8
-    table IS the store, and searching it must not require rebuilding
-    floats (r4 verdict item 6).
+# ------------------------------------------------------------ vector index
+def _centroid_udf(spark, cents: np.ndarray):
+    """pandas UDF: an array column → the id of its nearest centroid."""
+    bc = spark.sparkContext.broadcast(cents)
 
-    Quantization can flip a near-boundary hyperplane sign, so the
-    bucket is computed from the SAME dequantized values a probe re-rank
-    will see — index and re-rank are self-consistent, and recall vs the
-    float index differs only by genuine boundary flips (bounded in
-    tests/test_pipeline_ops.py)."""
-    q = quantize_embeddings(df, id_col, vec_col)
-    deq = F.expr("transform(qvec, v -> cast(v * scale as double))")
-    bucket_of = _bucket_udf_lazy(n_planes)
-    (q.withColumn("bucket", bucket_of(deq))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-    jvm = df.sparkSession._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(df.sparkSession._jsc.hadoopConfiguration())
-    if not any(c.getPath().getName().startswith("bucket=")
-               for c in fs.listStatus(p)):
+    @F.pandas_udf("int")
+    def centroid_of(vecs: pd.Series) -> pd.Series:
+        c = bc.value
+        m = np.stack(vecs.to_numpy()).astype(np.float64)
+        d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (m @ c.T)
+        return pd.Series(d2.argmin(axis=1).astype(np.int32))
+    return centroid_of
+
+
+def build_vector_index(df: DataFrame, path: str, assign: str = "lsh",
+                       storage: str = "float", n_planes: int = 10,
+                       k: int = 16, iters: int = 8, id_col: str = "vec_id",
+                       vec_col: str = "embedding") -> dict:
+    """Write ``df``'s vectors as a partitioned index at ``path`` (module
+    docstring), overwriting what is there, and return its sidecar.
+
+    ``assign="lsh"`` buckets by ``n_planes`` hyperplanes; ``assign="ivf"``
+    clusters with ``kmeans_centroids(k, iters)`` (a table with fewer than
+    ``k`` rows gets as many centroids as rows). ``storage="int8"`` stores
+    ``quantize_embeddings`` output and assigns on its dequantized values,
+    the values a probe re-ranks.
+
+    One ``observe`` on the write counts the rows and the least and
+    greatest vector length, with no extra job. An empty input, or a
+    vector column whose length varies, raises ``ValueError`` before the
+    sidecar is written, so a failed build cannot be probed.
+    """
+    if assign not in PARTITION_COL:
+        raise ValueError(f"assign={assign!r}: expected one of "
+                         f"{sorted(PARTITION_COL)}")
+    if storage == "float":
+        rows, vec, stored = df.select(id_col, vec_col), F.col(vec_col), vec_col
+    elif storage == "int8":
+        rows = quantize_embeddings(df, id_col, vec_col)
+        vec, stored = _dequantized("double"), "qvec"
+    else:
+        raise ValueError(f"storage={storage!r}: expected 'float' or 'int8'")
+    meta = {"layout_version": LAYOUT_VERSION, "assign": assign,
+            "storage": storage}
+    if assign == "lsh":
+        meta["n_planes"] = n_planes
+        part = hyperplane_bucket_udf(n_planes)(vec)
+    else:
+        cents = kmeans_centroids(rows.select(id_col, vec.alias(vec_col)),
+                                 vec_col, k, iters, id_col)
+        meta["centroids"] = cents.tolist()
+        part = _centroid_udf(df.sparkSession, cents)(vec)
+
+    part_col = PARTITION_COL[assign]
+    out = rows.withColumn(part_col, part)
+    obs = Observation()
+    (out.observe(obs, F.count(F.lit(1)).alias("rows"),
+                 F.min(F.size(stored)).alias("min_dim"),
+                 F.max(F.size(stored)).alias("max_dim"))
+     .write.mode("overwrite").partitionBy(part_col).parquet(path))
+    seen = obs.get
+    if not seen["rows"]:
         raise ValueError("cannot index an empty table")
+    if seen["min_dim"] != seen["max_dim"]:
+        raise ValueError(
+            f"{vec_col} is ragged: vectors of dim {seen['min_dim']} and "
+            f"{seen['max_dim']}; every vector of an index must have one dim")
+    data = [f for f in out.schema.fields if f.name != part_col]
+    meta.update(dim=seen["max_dim"], id_col=id_col, vec_col=vec_col,
+                schema=StructType(data + [out.schema[part_col]]).jsonValue())
+    _write_manifest(df.sparkSession, path, meta, SIDECAR)
+    return meta
 
 
-def ann_topk_indexed_quantized(spark, path: str, query_vec: list[float],
-                               k: int = 10, id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               n_planes: int = 10) -> DataFrame:
-    """Query a build_ann_index_quantized layout: the probe set is a
-    PARTITION filter (only n_planes+1 of 2^n_planes directories are
-    read), and candidates DEQUANTIZE ON READ (q·scale, a built-in
-    transform fused into the scan projection — whole-stage codegen, no
-    Python) before the exact-cosine re-rank. The store stays int8 end
-    to end; floats exist only inside the probe's candidate set."""
-    df = spark.read.parquet(path)
-    planes = lsh_plan_buckets(spark, len(query_vec), n_planes)
-    probes = _probe_buckets(query_vec, planes)
-    cands = (df.filter(F.col("bucket").isin(probes))
-             .select(id_col,
-                     F.expr("transform(qvec, q -> cast(q * scale as float))")
-                     .alias(vec_col)))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
+def _read_sidecar(spark, path: str) -> dict:
+    try:
+        meta = _read_manifest(spark, path, SIDECAR)
+    except json.JSONDecodeError:
+        meta = None
+    if not meta:
+        raise ValueError(
+            f"no vector index sidecar at {path.rstrip('/')}/{SIDECAR} "
+            "(missing, empty or unreadable): build the index with "
+            "build_vector_index")
+    if meta.get("layout_version") != LAYOUT_VERSION:
+        raise ValueError(
+            f"vector index sidecar at {path} has layout version "
+            f"{meta.get('layout_version')!r}, expected {LAYOUT_VERSION}: "
+            "rebuild the index with build_vector_index")
+    return meta
+
+
+def vector_topk(spark, path: str, query_vec: list[float], k: int = 10,
+                nprobe: int | None = None) -> DataFrame:
+    """Approximate cosine top-k of ``query_vec`` over the index at
+    ``path``: the probe set becomes a partition filter, and the rows read
+    are re-ranked exactly by ``cosine_topk``.
+
+    Planes, centroids, dim, storage and column names come from the
+    sidecar. An LSH index probes the query's bucket and its ``n_planes``
+    one-bit flips, and passing ``nprobe`` to it raises. An IVF index
+    probes the ``nprobe`` (default 4) nearest centroids: recall rises with
+    ``nprobe`` and the probe is exact once ``nprobe`` reaches the number
+    of centroids. A query whose length is not the index's dim raises.
+    Building the DataFrame starts no Spark job.
+    """
+    meta = _read_sidecar(spark, path)
+    dim, assign = meta["dim"], meta["assign"]
+    if len(query_vec) != dim:
+        raise ValueError(f"query vector has dim {len(query_vec)}, but the "
+                         f"index at {path} holds vectors of dim {dim}")
+    qv = np.asarray(query_vec, dtype=np.float64)
+    if assign == "lsh":
+        if nprobe is not None:
+            raise ValueError(
+                "nprobe applies to an IVF index; an LSH index probes the "
+                "query's bucket and its n_planes one-bit flips")
+        planes = hyperplanes(dim, meta["n_planes"])
+        qsig = int(((qv @ planes.T) > 0) @ (1 << np.arange(len(planes))))
+        probes = [qsig] + [qsig ^ (1 << i) for i in range(len(planes))]
+    else:
+        cents = np.asarray(meta["centroids"], dtype=np.float64)
+        d2 = (cents * cents).sum(axis=1) - 2.0 * (cents @ qv)
+        n = DEFAULT_NPROBE if nprobe is None else nprobe
+        probes = [int(i) for i in np.argsort(d2)[:n]]
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    cands = (_read_parquet(spark, path, meta)
+             .filter(F.col(PARTITION_COL[assign]).isin(probes)))
+    if meta["storage"] == "int8":
+        cands = cands.select(id_col, _dequantized().alias(vec_col))
+    return cosine_topk(cands, query_vec, k, id_col, vec_col)

@@ -2,7 +2,21 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine of two array columns named by SQL expressions ``a`` and
+    ``b``, summed in double with built-ins (zip_with / aggregate): JVM-side,
+    no Python in the path."""
+    def norm(v: str) -> Column:
+        return F.expr(f"sqrt(aggregate({v}, cast(0.0 as double), (acc, x)"
+                      " -> acc + cast(x as double) * cast(x as double)))")
+    dot = F.expr(f"aggregate(zip_with({a}, {b},"
+                 " (x, y) -> cast(x as double) * cast(y as double)),"
+                 " cast(0.0 as double), (acc, v) -> acc + v)")
+    return dot / (norm(a) * norm(b))
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,

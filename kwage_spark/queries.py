@@ -746,16 +746,9 @@ def cosine_topk_bruteforce(spark, sf_dir):
     Pure built-ins (zip_with/aggregate): JVM-side, no Python in the hot
     path; the query vector joins via broadcast.
     """
-    from .operators.util import ensure_parallelism
+    from .operators.util import cosine, ensure_parallelism
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    dot = F.expr("aggregate(zip_with(embedding, qv, (x, y) ->"
-                 " cast(x as double) * cast(y as double)),"
-                 " cast(0.0 as double), (acc, v) -> acc + v)")
-    nrm = F.expr("sqrt(aggregate(embedding, cast(0.0 as double),"
-                 " (acc, x) -> acc + cast(x as double) * cast(x as double)))")
-    qnrm = F.expr("sqrt(aggregate(qv, cast(0.0 as double),"
-                  " (acc, x) -> acc + cast(x as double) * cast(x as double)))")
     # widen before the per-row interpreted higher-order dot/norm work:
     # the single-row-group embeddings file otherwise pins the whole
     # scoring pass to one task (0.42s → 0.22s at sf1.0, guide §2.5);
@@ -765,7 +758,7 @@ def cosine_topk_bruteforce(spark, sf_dir):
         key_cols=["vec_id"])
     return (scored
             .crossJoin(F.broadcast(q))
-            .withColumn("cos", dot / (nrm * qnrm))
+            .withColumn("cos", cosine("embedding", "qv"))
             .orderBy(F.desc("cos"), "vec_id")
             .select("vec_id", F.round("cos", 5).alias("cosine"))
             .limit(10))

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from .operators.caching import scoped_materialize as _scoped_materialize
 from .operators.dedup import (embedding_near_duplicates, minhash_lsh_pairs,
                               simhash_near_duplicates)
-from .operators.similarity import ann_topk_indexed, build_ann_index
+from .operators.similarity import build_vector_index, vector_topk
 from .operators.text import (_STOPWORDS, language_id, quality_scores,
                              token_count_bpe, top_tokens_per_group,
                              unigram_logprob_score, winnowing_fingerprints)
@@ -166,17 +166,17 @@ def _probe_vector(sf_dir: str, spark=None) -> tuple[int, list[float]]:
 
 @register("ann_topk_lsh")  # rows-only (approximate by design)
 def q_ann_lsh(spark, sf_dir):
-    """ANN top-k through the PERSISTED index: build_ann_index materializes
-    the hyperplane-bucketed layout once, ann_topk_indexed reads back only
-    the n_planes+1 probe buckets as a PARTITION filter (plan-asserted in
-    tests/test_plans.py::test_ann_indexed_probe_prunes_partitions) — the
-    IVF-probe read path, not a full-corpus scan per query."""
+    """ANN top-k through the PERSISTED LSH index: build_vector_index
+    writes the hyperplane-bucketed layout once, and vector_topk reads back
+    only the n_planes+1 probe buckets as a PARTITION filter (plan-asserted
+    in tests/test_plans.py::test_ann_indexed_probe_prunes_partitions) —
+    the IVF-probe read path, not a full-corpus scan per query."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qid, qv = _probe_vector(sf_dir, spark)
     sf = os.path.basename(os.path.normpath(sf_dir))
     path = f"/tmp/kwage_spark_scratch/{sf}/ann_index"
-    build_ann_index(e.filter(F.col("vec_id") != qid), path)
-    return ann_topk_indexed(spark, path, qv, k=10)
+    build_vector_index(e.filter(F.col("vec_id") != qid), path)
+    return vector_topk(spark, path, qv, k=10)
 
 
 _ASCII_RE = r"^[\x00-\x7F]*$"
@@ -184,37 +184,37 @@ _ASCII_RE = r"^[\x00-\x7F]*$"
 
 @register("ivf_topk_learned")  # rows-only (approximate; exact twin:
 def q_ivf_topk(spark, sf_dir):  # cosine_topk_bruteforce, oracle-green)
-    """ANN through an IVF index with LEARNED centroids: deterministic
+    """ANN through the vector index with assign="ivf": a deterministic
     distributed k-means coarse quantizer, inverted lists as partition
-    directories, nprobe nearest lists scanned via PartitionFilters,
-    exact re-rank inside (operators/similarity.py; recall + pruning
-    asserted in tests/test_pipeline_ops.py::test_ivf_index_recall...)."""
-    from .operators.similarity import build_ivf_index, ivf_topk
+    directories, the nprobe nearest lists scanned via PartitionFilters
+    and an exact re-rank inside (operators/similarity.py; recall and
+    pruning asserted in
+    tests/test_pipeline_ops.py::test_ivf_index_recall_and_pruning)."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qid, qv = _probe_vector(sf_dir, spark)
     sf = os.path.basename(os.path.normpath(sf_dir))
     path = f"/tmp/kwage_spark_scratch/{sf}/ivf_index"
-    build_ivf_index(e.filter(F.col("vec_id") != qid), path,
-                    k=16, iters=5)
-    return ivf_topk(spark, path, qv, topk=10, nprobe=4)
+    build_vector_index(e.filter(F.col("vec_id") != qid), path,
+                       assign="ivf", k=16, iters=5)
+    return vector_topk(spark, path, qv, k=10, nprobe=4)
 
 
 @register("ann_topk_quantized")  # rows-only (approximate; exact twin:
 def q_ann_quantized(spark, sf_dir):  # cosine_topk_bruteforce, oracle-green)
-    """ANN probe over the INT8 store: build_ann_index_quantized persists
-    ONLY (scale, qvec) bucketed by hyperplane sign, and the probe
-    dequantizes on read inside the pruned candidate scan — at 100 TB the
-    embedding store IS int8, so search must not require the float copy.
-    Recall vs the float index is bounded in
-    tests/test_pipeline_ops.py::test_quantized_ann_recall..."""
-    from .operators.similarity import (ann_topk_indexed_quantized,
-                                      build_ann_index_quantized)
+    """ANN probe over the INT8 store: build_vector_index with
+    storage="int8" persists ONLY (scale, qvec) bucketed by hyperplane
+    sign, and vector_topk dequantizes on read inside the pruned candidate
+    scan — at 100 TB the embedding store IS int8, so search must not
+    require the float copy. Recall vs the float index is bounded in
+    tests/test_pipeline_ops.py::test_quantized_ann_recall_matches_float_path
+    """
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qid, qv = _probe_vector(sf_dir, spark)
     sf = os.path.basename(os.path.normpath(sf_dir))
     path = f"/tmp/kwage_spark_scratch/{sf}/ann_index_q8"
-    build_ann_index_quantized(e.filter(F.col("vec_id") != qid), path)
-    return ann_topk_indexed_quantized(spark, path, qv, k=10)
+    build_vector_index(e.filter(F.col("vec_id") != qid), path,
+                       storage="int8")
+    return vector_topk(spark, path, qv, k=10)
 
 
 @register("multimodal_featurize_fake", r"""

@@ -108,12 +108,14 @@ def _fs_path(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def _manifest_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{MANIFEST}"
+def _manifest_path(path: str, name: str = MANIFEST) -> str:
+    return f"{path.rstrip('/')}/{name}"
 
 
-def _read_manifest(spark: SparkSession, path: str) -> dict | None:
-    fs, p = _fs_path(spark, _manifest_path(path))
+def _read_manifest(spark: SparkSession, path: str,
+                   name: str = MANIFEST) -> dict | None:
+    """The JSON sidecar ``name`` at the root of ``path``, or None."""
+    fs, p = _fs_path(spark, _manifest_path(path, name))
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -124,17 +126,21 @@ def _read_manifest(spark: SparkSession, path: str) -> dict | None:
         stream.close()
 
 
-def _write_manifest(spark: SparkSession, path: str, schema: StructType,
-                    group_col: str | None, buckets: int | None) -> None:
-    body = json.dumps({"layout_version": LAYOUT_VERSION,
-                       "group_col": group_col, "buckets": buckets,
-                       "schema": schema.jsonValue()}, indent=1)
-    fs, p = _fs_path(spark, _manifest_path(path))
+def _write_manifest(spark: SparkSession, path: str, body: dict,
+                    name: str = MANIFEST) -> None:
+    """Write ``body`` as the JSON sidecar ``name`` at the root of ``path``."""
+    fs, p = _fs_path(spark, _manifest_path(path, name))
     out = fs.create(p, True)
     try:
-        out.write(bytearray(body.encode()))
+        out.write(bytearray(json.dumps(body, indent=1).encode()))
     finally:
         out.close()
+
+
+def _store_manifest(schema: StructType, group_col: str | None,
+                    buckets: int | None) -> dict:
+    return {"layout_version": LAYOUT_VERSION, "group_col": group_col,
+            "buckets": buckets, "schema": schema.jsonValue()}
 
 
 def _stored_schema(df: DataFrame) -> StructType:
@@ -259,13 +265,15 @@ def write_sketch_store(sketches: DataFrame, path: str, group_col: str,
         out = _pack_buckets(out)
     _write_bucketed(out, path, mode)
     if fresh:
-        _write_manifest(spark, path, schema, group_col, buckets)
+        _write_manifest(spark, path,
+                        _store_manifest(schema, group_col, buckets))
 
 
 def _read_parquet(spark: SparkSession, path: str,
                   manifest: dict | None) -> DataFrame:
-    """The store with its ``_bucket`` column. With a manifest: its schema,
-    and the bucket dirs listed on the driver, so no Spark job starts."""
+    """The partitioned parquet dir with its partition column. With a
+    manifest (or any sidecar with a ``schema``): its schema, and the
+    partition dirs listed on the driver, so no Spark job starts."""
     if manifest is None:
         return spark.read.parquet(path)
     reader = spark.read.schema(StructType.fromJson(manifest["schema"]))
@@ -403,7 +411,8 @@ def compact_sketch_store(spark: SparkSession, path: str,
                        "dynamic"):
         _write_bucketed(packed, path, "overwrite")
     if migrate:
-        _write_manifest(spark, path, _stored_schema(packed), None, None)
+        _write_manifest(spark, path,
+                        _store_manifest(_stored_schema(packed), None, None))
     after = _bucket_file_counts(spark, path)
     return {"buckets_compacted": len(hot),
             "files_before": files_before,

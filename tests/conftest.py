@@ -14,3 +14,14 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+def new_jobs(spark, fn):
+    """(fn(), number of Spark jobs it started), via the status tracker."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)

@@ -11,7 +11,8 @@ from kwage_spark.operators.dedup import (
     simhash_near_duplicates, simhash_signatures)
 from kwage_spark.operators.multimodal import (
     decode_and_featurize, frame_sample, make_media_table)
-from kwage_spark.operators.similarity import ann_topk_lsh, cosine_topk
+from kwage_spark.operators.similarity import (build_vector_index,
+                                              cosine_topk, vector_topk)
 from kwage_spark.operators.text import (
     language_id, quality_scores, token_count_bpe, winnowing_fingerprints)
 
@@ -151,13 +152,15 @@ def test_embedding_near_duplicates(spark, vectors):
     assert (pairs.cosine >= 0.98).all()
 
 
-def test_cosine_topk_and_ann_agree(spark, vectors):
+def test_cosine_topk_and_ann_agree(spark, vectors, tmp_path):
     qv = vectors.filter(F.col("vec_id") == 0).first()["embedding"]
     exact = cosine_topk(vectors.filter(F.col("vec_id") != 0), qv, k=5).toPandas()
     # its planted twin must be rank 1 with cosine ~1
     assert exact.vec_id.iloc[0] == 500
     assert exact.cosine.iloc[0] > 0.99
-    approx = ann_topk_lsh(vectors.filter(F.col("vec_id") != 0), qv, k=5).toPandas()
+    path = str(tmp_path / "lsh")
+    build_vector_index(vectors.filter(F.col("vec_id") != 0), path)
+    approx = vector_topk(spark, path, qv, k=5).toPandas()
     assert approx.vec_id.iloc[0] == 500     # multi-probe must find the twin
     # every ANN result's cosine matches brute-force scoring (same math)
     ref = dict(zip(exact.vec_id, exact.cosine))
@@ -332,6 +335,48 @@ def test_quantize_edge_battery(spark):
     assert rows[5]["qvec"][:2] == [-127, 127]
 
 
+@pytest.mark.parametrize("assign", ["lsh", "ivf"])
+def test_vector_index_rejects_empty_input(spark, tmp_path, assign):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="cannot index an empty table"):
+        build_vector_index(empty, str(tmp_path / "idx"), assign=assign)
+
+
+def test_vector_index_rejects_ragged_column(spark, tmp_path):
+    """One dim per partition: each task sees one dim, so only the build's
+    observed min/max length can tell, and no sidecar is written."""
+    from kwage_spark.operators.similarity import SIDECAR
+    rag = spark.createDataFrame(
+        [(i, [1.0 + i] * (4 if i < 50 else 8)) for i in range(100)],
+        "vec_id long, embedding array<float>").repartitionByRange(2, "vec_id")
+    path = tmp_path / "rag"
+    with pytest.raises(ValueError, match="dim 4 and 8"):
+        build_vector_index(rag, str(path), n_planes=4)
+    assert not (path / SIDECAR).exists()
+
+
+def test_vector_topk_rejects_mismatched_query_and_sidecar(spark, tmp_path):
+    from kwage_spark.operators.similarity import SIDECAR
+    emb = spark.createDataFrame([(i, [float(i), 1.0, 0.5]) for i in range(8)],
+                                "vec_id long, embedding array<float>")
+    path = str(tmp_path / "idx")
+    build_vector_index(emb, path, n_planes=4)
+    with pytest.raises(ValueError, match=r"dim 2\b.*dim 3"):
+        vector_topk(spark, path, [1.0, 0.0])
+    # the probe takes its params from the sidecar; nprobe is IVF-only
+    with pytest.raises(ValueError, match="nprobe"):
+        vector_topk(spark, path, [1.0, 0.0, 0.0], nprobe=2)
+    top = vector_topk(spark, path, [7.0, 1.0, 0.5], k=1).first()
+    assert top["vec_id"] == 7
+    (tmp_path / "bare").mkdir()
+    with pytest.raises(ValueError, match="sidecar"):
+        vector_topk(spark, str(tmp_path / "bare"), [1.0, 0.0, 0.0])
+    (tmp_path / "blank").mkdir()
+    (tmp_path / "blank" / SIDECAR).write_text("{}")
+    with pytest.raises(ValueError, match="sidecar"):
+        vector_topk(spark, str(tmp_path / "blank"), [1.0, 0.0, 0.0])
+
+
 def test_ivf_guards_empty_sidecar_and_small_table(spark, tmp_path):
     """An empty/missing centroid sidecar raises a clear error (not
     IndexError), and a table smaller than k clamps the quantizer so the
@@ -339,20 +384,24 @@ def test_ivf_guards_empty_sidecar_and_small_table(spark, tmp_path):
     to brute force as documented."""
     import pytest as _pt
 
-    from kwage_spark.operators.similarity import build_ivf_index, ivf_topk
-    (spark.createDataFrame([], "centroid int, cvec array<double>")
-     .write.parquet(str(tmp_path / "ivf0" / "_centroids")))
+    import json
+
+    from kwage_spark.operators.similarity import SIDECAR
+    (tmp_path / "ivf0").mkdir()
+    (tmp_path / "ivf0" / SIDECAR).write_text("")
     with _pt.raises(ValueError, match="sidecar"):
-        ivf_topk(spark, str(tmp_path / "ivf0"), [0.0, 1.0], topk=3)
+        vector_topk(spark, str(tmp_path / "ivf0"), [0.0, 1.0], k=3)
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(5)],
         "vec_id long, embedding array<float>")
     path = str(tmp_path / "ivf_small")
-    cents = build_ivf_index(emb, path, k=16, iters=2)
+    cents = np.asarray(build_vector_index(emb, path, assign="ivf", k=16,
+                                          iters=2)["centroids"])
     assert cents.shape[0] == 5  # clamped to the table size
-    assert spark.read.parquet(f"{path}/_centroids").count() == 5
-    res = ivf_topk(spark, path, [4.0, 1.0], topk=3, nprobe=5).collect()
+    with open(f"{path}/{SIDECAR}") as f:
+        assert len(json.load(f)["centroids"]) == 5
+    res = vector_topk(spark, path, [4.0, 1.0], k=3, nprobe=5).collect()
     assert res[0]["vec_id"] == 4  # exact answer at nprobe >= k_eff
 
 
@@ -383,17 +432,16 @@ def test_ivf_index_recall_and_pruning(spark, tmp_path):
     """IVF with learned centroids: k-means is deterministic, the probe
     scan is partition-pruned, recall@10 beats the nprobe/k floor and
     hits 1.0 at nprobe=k (brute-force equivalence)."""
-    from kwage_spark.operators.similarity import (build_ivf_index,
-                                                  cosine_topk, ivf_topk)
     from kwage_spark.plans.inspect import partition_filters
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qv = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     path = str(tmp_path / "ivf")
-    c1 = build_ivf_index(emb, path, k=8, iters=4)
-    c2 = build_ivf_index(emb, str(tmp_path / "ivf2"), k=8, iters=4)
-    assert (c1 == c2).all(), "k-means must be deterministic"
+    c1 = build_vector_index(emb, path, assign="ivf", k=8, iters=4)
+    c2 = build_vector_index(emb, str(tmp_path / "ivf2"), assign="ivf", k=8,
+                            iters=4)
+    assert c1["centroids"] == c2["centroids"], "k-means must be deterministic"
 
-    res = ivf_topk(spark, path, qv, topk=10, nprobe=2)
+    res = vector_topk(spark, path, qv, k=10, nprobe=2)
     pf = partition_filters(res)
     assert "centroid" in pf, f"probe scan not partition-pruned:\n{pf}"
     exact = [r["vec_id"] for r in cosine_topk(emb, qv, k=10).collect()]
@@ -402,7 +450,7 @@ def test_ivf_index_recall_and_pruning(spark, tmp_path):
     assert recall >= 0.5, f"nprobe=2 recall {recall}"
     # nprobe = k degenerates to exact brute force
     full = [r["vec_id"] for r in
-            ivf_topk(spark, path, qv, topk=10, nprobe=8).collect()]
+            vector_topk(spark, path, qv, k=10, nprobe=8).collect()]
     assert full == exact
 
 
@@ -590,14 +638,10 @@ def test_quantized_ann_recall_matches_float_path(spark, vectors, tmp_path):
     recall vs the float index beyond quantization-boundary noise: for
     every planted-twin query, recall@10 of the quantized path >= the
     float path's recall - 0.1, and both find the twin at rank 1."""
-    from kwage_spark.operators.similarity import (
-        ann_topk_indexed, ann_topk_indexed_quantized, build_ann_index,
-        build_ann_index_quantized, cosine_topk)
-
     fpath = str(tmp_path / "float_idx")
     qpath = str(tmp_path / "q8_idx")
-    build_ann_index(vectors, fpath)
-    build_ann_index_quantized(vectors, qpath)
+    build_vector_index(vectors, fpath)
+    build_vector_index(vectors, qpath, storage="int8")
 
     hits_f = hits_q = twins_f = twins_q = 0
     queries = [0, 7, 13, 21, 34]
@@ -608,10 +652,10 @@ def test_quantized_ann_recall_matches_float_path(spark, vectors, tmp_path):
         rest = vectors.filter(F.col("vec_id") != qi)
         exact = [r["vec_id"] for r in cosine_topk(rest, qv, k=10).collect()]
         fl = [r["vec_id"] for r in
-              ann_topk_indexed(spark, fpath, qv, k=11).collect()
+              vector_topk(spark, fpath, qv, k=11).collect()
               if r["vec_id"] != qi][:10]
         qz = [r["vec_id"] for r in
-              ann_topk_indexed_quantized(spark, qpath, qv, k=11).collect()
+              vector_topk(spark, qpath, qv, k=11).collect()
               if r["vec_id"] != qi][:10]
         # when an index path surfaces the planted twin it must be rank 1
         # (the twin's cosine ~1 dominates); whether the probe REACHES the

@@ -184,17 +184,17 @@ def test_store_group_read_prunes_partitions(spark, tmp_path):
 
 
 def test_ann_indexed_probe_prunes_partitions(spark, tmp_path):
-    """ann_topk_indexed's bucket .isin(probes) must be a PartitionFilter on
-    the build_ann_index layout — the scan reads n_planes+1 of 2^n_planes
+    """vector_topk's bucket .isin(probes) must be a PartitionFilter on
+    the LSH index layout — the scan reads n_planes+1 of 2^n_planes
     directories, the IVF-probe contract."""
-    from kwage_spark.operators.similarity import (ann_topk_indexed,
-                                                  build_ann_index)
+    from kwage_spark.operators.similarity import (build_vector_index,
+                                                  vector_topk)
     from kwage_spark.plans.inspect import partition_filters
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     first = emb.orderBy("vec_id").first()
     path = str(tmp_path / "ann")
-    build_ann_index(emb, path, n_planes=6)
-    res = ann_topk_indexed(spark, path, first["embedding"], k=5, n_planes=6)
+    build_vector_index(emb, path, n_planes=6)
+    res = vector_topk(spark, path, first["embedding"], k=5)
     pf = partition_filters(res)
     assert "bucket" in pf and ("IN" in pf or "In" in pf), \
         f"no partition pruning on bucket:\n{pf}"
@@ -292,15 +292,14 @@ def test_quantized_ann_probe_prunes_partitions(spark, tmp_path):
     the float index: bucket .isin(probes) prunes at the scan, and the
     dequantize transform is fused into the scan projection (no Python
     stage between scan and re-rank)."""
-    from kwage_spark.operators.similarity import (
-        ann_topk_indexed_quantized, build_ann_index_quantized)
+    from kwage_spark.operators.similarity import (build_vector_index,
+                                                  vector_topk)
     from kwage_spark.plans.inspect import partition_filters
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     first = emb.orderBy("vec_id").first()
     path = str(tmp_path / "annq8")
-    build_ann_index_quantized(emb, path, n_planes=6)
-    res = ann_topk_indexed_quantized(spark, path, first["embedding"],
-                                     k=5, n_planes=6)
+    build_vector_index(emb, path, storage="int8", n_planes=6)
+    res = vector_topk(spark, path, first["embedding"], k=5)
     pf = partition_filters(res)
     assert "bucket" in pf and ("IN" in pf or "In" in pf), \
         f"no partition pruning on bucket:\n{pf}"
@@ -308,3 +307,23 @@ def test_quantized_ann_probe_prunes_partitions(spark, tmp_path):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     top = res.collect()
     assert top and top[0]["vec_id"] == first["vec_id"]  # self ~ its own NN
+
+
+def test_vector_topk_starts_no_jobs(spark, tmp_path):
+    """The probe reads with the sidecar's schema and lists the bucket dirs
+    on the driver: building its DataFrame starts no Spark job, even above
+    Spark's parallel-listing threshold of 32 dirs."""
+    from pathlib import Path
+
+    from kwage_spark.operators.similarity import (build_vector_index,
+                                                  vector_topk)
+    from conftest import new_jobs
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    first = emb.orderBy("vec_id").first()
+    path = str(tmp_path / "lsh")
+    build_vector_index(emb, path, n_planes=8)
+    assert len(list(Path(path).glob("bucket=*"))) > 32
+    res, jobs = new_jobs(spark,
+                         lambda: vector_topk(spark, path, first["embedding"]))
+    assert jobs == 0
+    assert res.first()["vec_id"] == first["vec_id"]

@@ -17,6 +17,8 @@ from kwage_spark.sources.fixtures import make_source_files
 from kwage_spark.sources.store import (
     MANIFEST, read_sketch_group, read_sketch_store, write_sketch_store)
 
+from conftest import new_jobs
+
 CFG = SketchConfig(bloom=BloomParams(k=8, log2_m=12, num_hash=3))
 
 
@@ -242,17 +244,6 @@ def test_store_roundtrip_through_scheme_uri(spark, tmp_path):
 
 
 # ------------------------------------------------ manifest and page layout
-def _new_jobs(spark, fn):
-    """(fn(), number of Spark jobs it started), via the status tracker."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    tracker = spark.sparkContext.statusTracker()
-    bus.waitUntilEmpty()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = fn()
-    bus.waitUntilEmpty()
-    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
-
-
 def _session_confs(spark):
     return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
 
@@ -297,17 +288,17 @@ def test_manifest_read_starts_no_jobs_and_restores_confs(spark, dense,
     assert len(list(Path(new).glob("_bucket=*"))) > 32
     assert (Path(new) / MANIFEST).exists() and not (Path(old) / MANIFEST).exists()
     confs = _session_confs(spark)
-    _, jobs = _new_jobs(spark, lambda: read_sketch_store(spark, new))
+    _, jobs = new_jobs(spark, lambda: read_sketch_store(spark, new))
     assert jobs == 0
-    grp, jobs = _new_jobs(spark,
-                          lambda: read_sketch_group(spark, new, "g", g))
+    grp, jobs = new_jobs(spark,
+                         lambda: read_sketch_group(spark, new, "g", g))
     assert jobs == 0
     assert _session_confs(spark) == confs
     # buckets defaulted to the manifest's 48, so the lookup finds the group
     assert {r["g"] for r in grp.collect()} == {g}
     # the counter does see discovery work: the old layout lists its dirs
     # and infers its schema from footers in jobs
-    _, jobs = _new_jobs(spark, lambda: read_sketch_store(spark, old))
+    _, jobs = new_jobs(spark, lambda: read_sketch_store(spark, old))
     assert jobs >= 2
 
 
@@ -357,7 +348,7 @@ def test_store_without_manifest_reads_identically_and_compaction_migrates(
     assert _rows(read_sketch_store(spark, path)) == want_all
     assert _rows(read_sketch_group(spark, path, "repo", repo,
                                    buckets=2)) == want_one
-    _, jobs = _new_jobs(spark, lambda: read_sketch_store(spark, path))
+    _, jobs = new_jobs(spark, lambda: read_sketch_store(spark, path))
     assert jobs == 0
     again = compact_sketch_store(spark, path)
     assert again["buckets_compacted"] == 0

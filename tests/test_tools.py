@@ -10,8 +10,8 @@ from kwage_spark.config import SketchConfig
 from kwage_spark.kernels.bloom import BloomState
 from kwage_spark.operators.diff import dump_states, sketch_diff
 from kwage_spark.operators.ingest import build_sketches
-from kwage_spark.operators.similarity import (ann_topk_indexed,
-                                              build_ann_index, cosine_topk)
+from kwage_spark.operators.similarity import (build_vector_index,
+                                              cosine_topk, vector_topk)
 from kwage_spark.plans.inspect import physical_plan
 from kwage_spark.sources.fixtures import make_source_files
 
@@ -82,10 +82,10 @@ def test_ann_index_prunes_partitions_and_recalls(spark, tmp_path):
         [(i, v.tolist()) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>")
     path = str(tmp_path / "ann_index")
-    build_ann_index(df, path, n_planes=6)
+    build_vector_index(df, path, n_planes=6)
 
     qv = vecs[0].tolist()
-    res = ann_topk_indexed(spark, path, qv, k=5, n_planes=6)
+    res = vector_topk(spark, path, qv, k=5)
     plan = physical_plan(res)
     assert "PartitionFilters" in plan and "bucket" in plan
 
