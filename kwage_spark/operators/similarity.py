@@ -80,6 +80,8 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
         O(k × n_partitions) tiny rows, never the n × dim vectors, and
         the driver reduces k rows per cluster (classic map-side combine).
     Empty clusters keep their previous centroid (standard Lloyd fix).
+    A vector whose dim differs from the seeds' raises ``ValueError``
+    naming both dims (a batch with one reports it instead of its sums).
     """
     from typing import Iterator as _It
     seed_rows = (df.orderBy(id_col).limit(k)
@@ -107,6 +109,12 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
             for pdf in batches:
                 if not len(pdf):
                     continue
+                lens = pdf[vec_col].map(len).to_numpy()
+                off = lens[lens != c.shape[1]]
+                if off.size:  # a ragged column: report, the driver raises
+                    yield pd.DataFrame({"cluster": [-1], "vsum": [[]],
+                                        "cnt": [int(off[0])]})
+                    continue
                 m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
                 # argmin ||x-c||^2 = argmin (||c||^2 - 2 x.c) — one matmul
                 d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (m @ c.T)
@@ -122,6 +130,13 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
         agg = vecs.mapInPandas(
             partials,
             schema="cluster int, vsum array<double>, cnt long").collect()
+        off = [r["cnt"] for r in agg if r["cluster"] < 0]
+        if off:
+            lo, hi = sorted((dim, off[0]))
+            bc.destroy()
+            raise ValueError(
+                f"{vec_col} is ragged: vectors of dim {lo} and {hi}; every "
+                "vector of an index must have one dim")
         sums = np.zeros((cents.shape[0], dim))
         cnts = np.zeros(cents.shape[0], dtype=np.int64)
         for r in agg:

@@ -355,6 +355,20 @@ def test_vector_index_rejects_ragged_column(spark, tmp_path):
     assert not (path / SIDECAR).exists()
 
 
+def test_ivf_index_rejects_ragged_column(spark, tmp_path):
+    """The IVF build's k-means sees one dim per partition too: each batch's
+    dim is checked against the centroids' before the matmul, and the
+    driver raises naming both dims, with no sidecar written."""
+    from kwage_spark.operators.similarity import SIDECAR
+    rag = spark.createDataFrame(
+        [(i, [1.0 + i] * (4 if i < 50 else 8)) for i in range(100)],
+        "vec_id long, embedding array<float>").repartitionByRange(2, "vec_id")
+    path = tmp_path / "rag"
+    with pytest.raises(ValueError, match="dim 4 and 8"):
+        build_vector_index(rag, str(path), assign="ivf", k=4)
+    assert not (path / SIDECAR).exists()
+
+
 def test_vector_topk_rejects_mismatched_query_and_sidecar(spark, tmp_path):
     from kwage_spark.operators.similarity import SIDECAR
     emb = spark.createDataFrame([(i, [float(i), 1.0, 0.5]) for i in range(8)],
