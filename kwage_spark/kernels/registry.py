@@ -36,10 +36,19 @@ def state_from_bytes(data: bytes):
     return cls.from_bytes(data)
 
 
+def fold_state_blobs(acc, blobs):
+    """Decode (crc-checked) each blob and merge it into ``acc`` left to
+    right; ``acc`` None starts from the first blob's state. Returns the
+    decoded state (None if both are empty)."""
+    for b in blobs:
+        st = state_from_bytes(b)
+        if acc is None:
+            acc = st
+        else:
+            acc.merge(st)
+    return acc
+
+
 def merge_state_blobs(blobs) -> bytes:
     """Fold serialized states by each kind's merge — associative core."""
-    it = iter(blobs)
-    acc = state_from_bytes(next(it))
-    for b in it:
-        acc.merge(state_from_bytes(b))
-    return acc.to_bytes()
+    return fold_state_blobs(None, blobs).to_bytes()

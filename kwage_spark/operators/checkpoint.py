@@ -17,15 +17,17 @@ scratch for filters whose completeness magic is set, rolling back the rest
 
 from __future__ import annotations
 
-import zlib
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
 from .ingest import build_sketches
 from .merge import merge_grouped_states
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 #: above this many rows on the small side, resume/lineage joins skip the
 #: explicit broadcast hint and let AQE/stats pick the strategy — at 10⁸+
@@ -63,17 +65,11 @@ def write_checkpoint(sketches: DataFrame, path: str,
     sketches.write.mode("overwrite").parquet(f"{path}/states")
     written = sketches.sparkSession.read.parquet(f"{path}/states")
 
-    def crc_rows(batches):
-        for pdf in batches:
-            out = pdf.drop(columns=["state"]).copy()
-            out["state_crc32"] = [zlib.crc32(bytes(b)) for b in pdf["state"]]
-            out["complete"] = True
-            yield out
-
-    manifest_schema = (", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in written.schema
-        if f.name != "state") + ", state_crc32 long, complete boolean")
-    manifest = written.mapInPandas(crc_rows, schema=manifest_schema)
+    # F.crc32 is zlib's CRC-32: the value manifests have always held
+    manifest = written.select(
+        *[c for c in written.columns if c != "state"],
+        F.crc32("state").alias("state_crc32"),
+        F.lit(True).alias("complete"))
     keys = [c for c in written.columns
             if c not in ("state", "n_rows", "n_kgrams", "meta",
                          "state_crc32", "complete")]
@@ -184,14 +180,8 @@ def verify_manifest(states: DataFrame, manifest: DataFrame,
                     group_cols: list[str]) -> pd.DataFrame:
     """Cross-check state crc32 against the manifest (end-to-end integrity,
     ≙ `build_db.cpp:144-159` re-verification). Returns mismatches."""
-    def crc_rows(batches):
-        for pdf in batches:
-            out = pdf[group_cols + ["kind"]].copy()
-            out["actual_crc32"] = [zlib.crc32(bytes(b)) for b in pdf["state"]]
-            yield out
-
-    keys = ", ".join(f"{c} string" for c in group_cols)
-    actual = states.mapInPandas(crc_rows, schema=f"{keys}, kind string, actual_crc32 long")
+    actual = states.select(*group_cols, "kind",
+                           F.crc32("state").alias("actual_crc32"))
     joined = actual.join(manifest, group_cols + ["kind"], "inner")
     return (joined.filter(F.col("actual_crc32") != F.col("state_crc32"))
             .toPandas())

@@ -76,9 +76,8 @@ ratio and the largest piece's groups against a raw partition's, or why
 it declined.
 
 Skew: in partial mode a mega-group combines wherever its rows sit (no hot
-partition); in raw mode a mega-group hashes to one partition — use
-build_sketches_salted for that layout, which splits groups into salted
-subgroups and re-merges (A4/A5 algebra).
+partition); in raw mode a mega-group hashes to one partition — pass
+``combine="partial"`` for that layout.
 """
 
 from __future__ import annotations
@@ -267,8 +266,7 @@ def _arrow_gen_partials(cfg: SketchConfig):
     """mapInArrow generator: per batch, group rows into (start, len)
     ranges over the string column's data buffer and feed the kernels
     directly — zero Python string objects — emitting one PARTIAL state
-    set per (batch, group). Extra columns (e.g. a salt used only for
-    partitioning) are ignored."""
+    set per (batch, group). Extra columns are ignored."""
     def gen_partials(batches):
         def entries():
             for batch in batches:
@@ -616,11 +614,12 @@ def _corpus_stats(src: DataFrame, cfg: SketchConfig,
     if target_parallelism is None:
         target_parallelism = src.sparkSession.sparkContext.defaultParallelism
     footer = _footer_scan(src, cfg)
+    totals = None
     if isinstance(footer, str):
         layout = footer
     else:
-        n_rows = int(footer.rg_rows.sum())
-        content_bytes = int(footer.rg_content.sum())
+        n_rows, content_bytes = totals = (int(footer.rg_rows.sum()),
+                                          int(footer.rg_content.sum()))
         layout = (f"group columns over the driver budget "
                   f"{GROUP_STATS_DRIVER_BUDGET} B")
         if footer.group_bytes <= GROUP_STATS_DRIVER_BUDGET:
@@ -631,35 +630,29 @@ def _corpus_stats(src: DataFrame, cfg: SketchConfig,
             else:
                 gs = _span_stats(spans, footer.rg_rows.size,
                                  target_parallelism)
-                return (n_rows, gs[0], content_bytes, gs[1]), (footer, spans)
-        # footer totals stand; only the group distincts need a (narrow,
-        # content-column-free) Spark aggregation
-        proj = src.select(
-            F.concat_ws("\x00", *cfg.group_cols).alias("_gkey"),
-            F.concat_ws("\x00", F.spark_partition_id().cast("string"),
-                        *cfg.group_cols).alias("_pkey"))
-        stats = proj.agg(
-            F.approx_count_distinct("_gkey").alias("n_groups"),
-            F.approx_count_distinct("_pkey").alias("n_span")).first()
-        return (n_rows, max(stats["n_groups"] or 1, 1), content_bytes,
-                _widened_span(src, max(stats["n_groups"] or 1, 1),
-                              max(stats["n_span"] or 1, 1), n_rows,
-                              target_parallelism)), layout
-    # project the (non-deterministic) partition id BEFORE aggregating —
-    # Spark forbids it inside an aggregate expression
+                return ((n_rows, gs[0], content_bytes, gs[1]),
+                        (footer, spans))
+    # one narrow Spark aggregation for the group distincts, plus the row
+    # count and content bytes when no footers supplied them (the content
+    # column stays out of the scan when they did). The (non-deterministic)
+    # partition id is projected BEFORE aggregating — Spark forbids it
+    # inside an aggregate expression
     proj = src.select(
         F.concat_ws("\x00", *cfg.group_cols).alias("_gkey"),
-        F.length(cfg.content_col).alias("_clen"),
         F.concat_ws("\x00", F.spark_partition_id().cast("string"),
-                    *cfg.group_cols).alias("_pkey"))
-    stats = proj.agg(
-        F.count("*").alias("n_rows"),
-        F.approx_count_distinct("_gkey").alias("n_groups"),
-        F.sum("_clen").alias("content_bytes"),
-        F.approx_count_distinct("_pkey").alias("n_span")).first()
-    n_rows = stats["n_rows"] or 0
+                    *cfg.group_cols).alias("_pkey"),
+        *([] if totals else [F.length(cfg.content_col).alias("_clen")]))
+    aggs = [F.approx_count_distinct("_gkey").alias("n_groups"),
+            F.approx_count_distinct("_pkey").alias("n_span")]
+    if totals is None:
+        aggs += [F.count("*").alias("n_rows"),
+                 F.sum("_clen").alias("content_bytes")]
+    stats = proj.agg(*aggs).first()
+    if totals is None:
+        n_rows = stats["n_rows"] or 0
+        content_bytes = stats["content_bytes"] or 0
     n_groups = max(stats["n_groups"] or 1, 1)
-    return (n_rows, n_groups, stats["content_bytes"] or 0,
+    return (n_rows, n_groups, content_bytes,
             _widened_span(src, n_groups, max(stats["n_span"] or 1, 1),
                           n_rows, target_parallelism)), layout
 
@@ -887,34 +880,12 @@ def build_sketches(df: DataFrame, cfg: SketchConfig,
         if stats is None:
             stats = corpus_stats(src, cfg)
         n_shuffle = raw_shuffle_partitions(stats[2], n_shuffle)
-    keyed = src.repartition(n_shuffle, *gcols)
+    # hash the key as _arrow_groups keys it (a null is ""), so a null and
+    # a "" of one group land in one partition and build one row
+    keyed = src.repartition(n_shuffle, *[
+        F.coalesce(F.col(c).cast("string"), F.lit("")) for c in gcols])
     return keyed.mapInArrow(functools.partial(_final_states, cfg=cfg),
                             schema=schema)
-
-
-def build_sketches_salted(df: DataFrame, cfg: SketchConfig,
-                          salt_buckets: int = 8,
-                          partitions: int | None = None) -> DataFrame:
-    """Explicitly salted two-stage aggregation for skewed raw-mode layouts.
-
-    A mega-group is split into (group, salt) subgroups — each built
-    independently on its own partition — then the salt is dropped and the
-    subgroup states merge (legal because the merge is associative +
-    commutative, A5; ≙ KWAGE's size-aware packing concern A12).
-    """
-    src = _select_inputs(df, cfg)
-    n_shuffle = int(partitions or
-                    src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    salted = src.withColumn(
-        "_salt", (F.crc32(F.col(cfg.content_col)) % salt_buckets).cast("int"))
-    stage1_in = salted.repartition(n_shuffle, *cfg.group_cols, "_salt")
-    gcols = list(cfg.group_cols)
-    schema = sketch_schema(cfg)
-    # the salt exists only to spread the shuffle; the Arrow partials
-    # generator groups by cfg.group_cols and ignores the extra column,
-    # so subgroup states merge back in the same grouped-reduce stage
-    partials = stage1_in.mapInArrow(_arrow_gen_partials(cfg), schema=schema)
-    return merge_grouped_states(partials, gcols)
 
 
 def config_for_corpus(src: DataFrame, base: SketchConfig,

@@ -11,12 +11,11 @@ replaces the pairwise loop. Cross-size merges go through fold() first
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.bloom import BloomState
-from ..kernels.registry import merge_state_blobs, state_from_bytes
+from ..kernels.registry import fold_state_blobs, state_from_bytes
 
 
 #: rows per output Arrow batch of the merge pass — bounds worker memory
@@ -42,10 +41,11 @@ def _run_starts(batch, keys: list[str]) -> np.ndarray:
 
 def _merge_runs(names: list[str], keys: list[str]):
     """mapInArrow generator over rows sorted by ``keys``: one output row
-    per key run — the run's first row, its states merged by
-    merge_state_blobs (each decoded and crc-checked) and its n_rows /
-    n_kgrams summed. The run still open at a batch's end is carried into
-    the next batch, so memory holds one run's states, not a partition."""
+    per key run — the run's first row, its states merged as
+    merge_state_blobs merges them and its n_rows / n_kgrams summed. The
+    open run holds one decoded state that each blob folds into as it
+    arrives, serialized once when the run ends; it is carried across
+    batch boundaries, so memory holds one state, not a run's blobs."""
     import pyarrow as pa
     sums = [c for c in ("n_rows", "n_kgrams") if c in names]
     heads_cols = [c for c in names if c != "state" and c not in sums]
@@ -53,7 +53,7 @@ def _merge_runs(names: list[str], keys: list[str]):
     def merge_runs(batches):
         heads = []            # head rows of the runs not yet emitted, in order
         states, totals = [], []
-        run_key, run_blobs, run_sums = None, [], []
+        run_key, run_state, run_sums = None, None, []
         types = {}
 
         def flush():
@@ -87,19 +87,19 @@ def _merge_runs(names: list[str], keys: list[str]):
             for j, (s, e) in enumerate(zip(starts.tolist(), ends)):
                 seg = [t[j] for t in seg_sums]
                 if j == 0 and continues:
-                    run_blobs += blobs[s:e]
+                    run_state = fold_state_blobs(run_state, blobs[s:e])
                     run_sums = [a + b for a, b in zip(run_sums, seg)]
                     continue
-                if run_blobs:
-                    states.append(merge_state_blobs(run_blobs))
+                if run_state is not None:
+                    states.append(run_state.to_bytes())
                     totals.append(run_sums)
                     if len(states) == _MERGE_BATCH_ROWS:
                         yield flush()
-                run_blobs, run_sums = blobs[s:e], seg
+                run_state, run_sums = fold_state_blobs(None, blobs[s:e]), seg
             run_key = tuple(batch.column(c)[int(starts[-1])].as_py()
                             for c in keys)
-        if run_blobs:
-            states.append(merge_state_blobs(run_blobs))
+        if run_state is not None:
+            states.append(run_state.to_bytes())
             totals.append(run_sums)
         if states:
             yield flush()
@@ -127,8 +127,9 @@ def merge_grouped_states(partials: DataFrame, group_cols: list[str]) -> DataFram
 
 def merge_states_global(df: DataFrame, kind: str) -> DataFrame:
     """Tree-merge ALL states of one kind into a single row — the two-level
-    distributed form of a global sketch union (A5 algebra): level 1 folds
-    each partition's states into one partial (mapInPandas, executor-side);
+    distributed form of a global sketch union (A5 algebra): level 1 runs
+    the same Arrow run merge per partition with no exchange (the input is
+    one kind, so a partition is one run) and folds it into one partial;
     level 2 merges the ≤n_partitions partials in one tiny final task.
 
     Never funnels per-group blobs through the driver: at 10⁶ groups ×
@@ -136,23 +137,8 @@ def merge_states_global(df: DataFrame, kind: str) -> DataFrame:
     ~100 GB to n_partitions rows."""
     src = (df.filter(F.col("kind") == kind)
            .select("kind", "state", "n_rows", "n_kgrams"))
-
-    def partial(batches):
-        acc, n_rows, n_kgrams = None, 0, 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            merged = merge_state_blobs(bytes(b) for b in pdf["state"])
-            acc = (merged if acc is None
-                   else merge_state_blobs([acc, merged]))
-            n_rows += int(pdf["n_rows"].sum())
-            n_kgrams += int(pdf["n_kgrams"].sum())
-        if acc is not None:
-            yield pd.DataFrame({"kind": [kind], "state": [acc],
-                                "n_rows": [n_rows], "n_kgrams": [n_kgrams]})
-
-    schema = "kind string, state binary, n_rows long, n_kgrams long"
-    partials = src.mapInPandas(partial, schema=schema)
+    partials = src.mapInArrow(_merge_runs(src.columns, ["kind"]),
+                              schema=src.schema)
     return merge_grouped_states(partials, [])
 
 

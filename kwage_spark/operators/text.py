@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..kernels.murmur3 import murmur3_32_multiseed
 from ..kernels.shingle import windows_of
+from .merge import merge_grouped_states
 
 # tiny public stopword profiles for the n-gram/stopword language heuristic
 _STOPWORDS = {
@@ -187,8 +188,9 @@ def frequent_tokens_mg(df: DataFrame, text_col: str, k: int = 64) -> DataFrame:
     """Distributed Misra-Gries heavy hitters over whitespace tokens —
     the frequent-items sketch (kernels/mg.py) run as a two-level
     mergeable aggregate: one bounded MG summary per input partition
-    (tokens never shuffle; each partial is ≤ k counters), then one tiny
-    state merge, with candidates emitted EXECUTOR-side.
+    (tokens never shuffle; each partial is ≤ k counters), then the state
+    merge every sketch takes (merge_grouped_states), with candidates
+    emitted EXECUTOR-side from the one merged row.
 
     Returns (token, est_count, max_err): true count ∈
     [est_count, est_count + max_err], and every token with true count
@@ -196,6 +198,8 @@ def frequent_tokens_mg(df: DataFrame, text_col: str, k: int = 64) -> DataFrame:
     scorecard: top_tokens_per_lang (oracle-green).
     """
     from collections import Counter
+
+    import pyarrow as pa
 
     from ..kernels.mg import MGState
 
@@ -209,32 +213,35 @@ def frequent_tokens_mg(df: DataFrame, text_col: str, k: int = 64) -> DataFrame:
                 st.add_items([t.encode("utf-8") for t in cnt],
                              np.fromiter(cnt.values(), dtype=np.int64,
                                          count=len(cnt)))
-        yield pd.DataFrame({"state": [st.to_bytes()]})
+        yield pd.DataFrame({"kind": ["mg"], "state": [st.to_bytes()]})
 
-    parts = df.select(text_col).mapInPandas(partials, schema="state binary")
+    parts = df.select(text_col).mapInPandas(
+        partials, schema="kind string, state binary")
+    out = pa.schema([("token", pa.string()), ("est_count", pa.int64()),
+                     ("max_err", pa.int64())])
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = MGState(k)
-        for blob in pdf["state"]:
-            st.merge(MGState.from_bytes(bytes(blob)))
-        ests = st.estimates()
-        return pd.DataFrame({
-            "token": [it.decode("utf-8") for it, _v, _e in ests],
-            "est_count": [v for _it, v, _e in ests],
-            "max_err": [e for _it, _v, e in ests]})
+    def emit(batches):
+        for batch in batches:
+            for blob in batch.column("state").to_pylist():
+                yield pa.RecordBatch.from_pylist(
+                    [{"token": it.decode("utf-8"), "est_count": v,
+                      "max_err": e}
+                     for it, v, e in MGState.from_bytes(blob).estimates()],
+                    schema=out)
 
-    return (parts.groupBy(F.lit(1).alias("_g"))
-            .applyInPandas(lambda _key, pdf: final(pdf),
-                           schema="token string, est_count long, max_err long"))
+    return merge_grouped_states(parts, []).mapInArrow(
+        emit, schema="token string, est_count long, max_err long")
 
 
 def kmv_token_sketches(df: DataFrame, text_col: str, group_col: str,
                        k: int = 256) -> DataFrame:
     """Per-group KMV (bottom-k) sketch over distinct whitespace tokens:
     (group, state binary, est_distinct double). Two-level mergeable
-    aggregate — per-batch partials (each ≤ k hashes), grouped state
-    merge — and because KMV state is a pure function of the token SET,
-    the merged state is byte-identical under ANY partitioning."""
+    aggregate — per-batch partials (each ≤ k hashes), then the grouped
+    state merge every sketch takes (merge_grouped_states) — and because
+    KMV state is a pure function of the token SET, the merged state is
+    byte-identical under ANY partitioning."""
+    from .. import functions as fx
     from ..kernels.kmv import KMVState, hash_items
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -248,25 +255,15 @@ def kmv_token_sketches(df: DataFrame, text_col: str, group_col: str,
                 st.add_hashes(hash_items([t.encode("utf-8")
                                           for t in toks]))
             if states:
-                yield pd.DataFrame({group_col: list(states),
+                yield pd.DataFrame({group_col: list(states), "kind": "kmv",
                                     "state": [s.to_bytes()
                                               for s in states.values()]})
 
     parts = df.select(group_col, text_col).mapInPandas(
-        partials, schema=f"{group_col} string, state binary")
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = KMVState(k)
-        for blob in pdf["state"]:
-            st.merge(KMVState.from_bytes(bytes(blob)))
-        return pd.DataFrame({group_col: [pdf[group_col].iloc[0]],
-                             "state": [st.to_bytes()],
-                             "est_distinct": [st.distinct_estimate()]})
-
-    return (parts.groupBy(group_col)
-            .applyInPandas(lambda _key, pdf: merge(pdf),
-                           schema=f"{group_col} string, state binary, "
-                                  "est_distinct double"))
+        partials, schema=f"{group_col} string, kind string, state binary")
+    return (merge_grouped_states(parts, [group_col])
+            .select(group_col, "state",
+                    fx.kmv_estimate("state").alias("est_distinct")))
 
 
 def kmv_group_overlap(sketches: DataFrame, group_col: str,

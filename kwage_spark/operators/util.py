@@ -9,14 +9,21 @@ from pyspark.sql import functions as F
 def cosine(a: str, b: str) -> Column:
     """Cosine of two array columns named by SQL expressions ``a`` and
     ``b``, summed in double with built-ins (zip_with / aggregate): JVM-side,
-    no Python in the path."""
+    no Python in the path. Two non-null vectors of different lengths raise,
+    naming both lengths (zip_with would pad the shorter with nulls and the
+    cosine would silently be null)."""
     def norm(v: str) -> Column:
         return F.expr(f"sqrt(aggregate({v}, cast(0.0 as double), (acc, x)"
                       " -> acc + cast(x as double) * cast(x as double)))")
     dot = F.expr(f"aggregate(zip_with({a}, {b},"
                  " (x, y) -> cast(x as double) * cast(y as double)),"
                  " cast(0.0 as double), (acc, v) -> acc + v)")
-    return dot / (norm(a) * norm(b))
+    ragged = F.expr(f"{a} is not null and {b} is not null"
+                    f" and size({a}) != size({b})")
+    msg = F.expr(f"concat('cosine of vectors of dim ', size({a}), ' and ',"
+                 f" size({b}))")
+    return F.when(ragged, F.raise_error(msg)).otherwise(
+        dot / (norm(a) * norm(b)))
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,

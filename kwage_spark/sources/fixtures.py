@@ -31,7 +31,7 @@ def make_source_files(n_repos: int = 3, files_per_repo: int = 20,
                       tokens_per_file: int = 40) -> pd.DataFrame:
     """Token-soup corpus: shared vocabulary + per-repo signature k-grams.
 
-    ``mega_repo_factor`` > 1 inflates repo 0 to exercise skew/salting
+    ``mega_repo_factor`` > 1 inflates repo 0 to exercise skew
     (FIXTURES.md: one mega-repo holding ~40% of rows);
     ``tokens_per_file`` scales per-file content for throughput benches.
     """

@@ -34,15 +34,17 @@ def _write(path, sizes, seed=1, content_len=(0, 80), null_keys=True,
     """One parquet file of groups laid out one after another (clustered),
     ``sizes[g]`` rows for group g (repo ``{prefix}{g // 2}``), cut into
     row groups of ``row_group_size`` rows. Content lengths are drawn from
-    ``content_len`` (inclusive). With ``null_keys`` group 5 has a null
-    repo and group 7 a null lang; every group has a null and an empty
-    content row when it has 5 rows or more. ``content_type`` is the
+    ``content_len`` (inclusive). With ``null_keys`` group 5's repo is null
+    on its even rows and "" on its odd ones (one group: every mode keys a
+    null as "") and group 7 has a null lang; every group has a null and an
+    empty content row when it has 5 rows or more. ``content_type`` is the
     content column's stored Arrow type."""
     rng = np.random.default_rng(seed)
     repo, lang, content = [], [], []
     for g, n in enumerate(sizes):
         for i in range(n):
-            repo.append(None if null_keys and g == 5 else f"{prefix}{g // 2}")
+            repo.append(("" if i % 2 else None) if null_keys and g == 5
+                        else f"{prefix}{g // 2}")
             lang.append(None if null_keys and g == 7 else f"l{g % 2}")
             ln = int(rng.integers(content_len[0], content_len[1] + 1))
             text = "".join(rng.choice(list("abcdefgh "), ln))
@@ -99,9 +101,10 @@ def test_closed_states_match_partial_and_raw(spark, clustered, tmp_path,
     partial = _rows(build_sketches(df, CFG, combine="partial"))
     raw = _rows(build_sketches(df, CFG, combine="raw"))
     assert closed == partial == raw
-    # null keys are keyed "" in every mode; the spanning group is whole
+    # null keys are keyed "" in every mode, also where a null and a ""
+    # share a group; the spanning group is whole
     keys = {(r[0], r[1]): (r[4], r[5]) for r in closed}
-    assert ("", "l1") in keys and ("r3", "") in keys
+    assert keys[("", "l1")][0] == 12 and ("r3", "") in keys
     assert keys[("r1", "l1")][0] == 24
     assert len(closed) == len(CLUSTERED) * len(CFG.kinds)
 

@@ -1,6 +1,7 @@
 """Merge-tool, fold-table, and checkpoint/resume semantics (A13, A4, T1-T4)."""
 
 import contextlib
+import zlib
 
 import numpy as np
 import pytest
@@ -22,6 +23,8 @@ from kwage_spark.operators.ingest import build_sketches
 from kwage_spark.operators.merge import (
     fold_bloom_table, merge_grouped_states, merge_sketch_tables,
     merge_states_global, verify_states)
+from kwage_spark.operators.text import frequent_tokens_mg, kmv_token_sketches
+from kwage_spark.plans.inspect import executed_nodes, physical_plan
 from kwage_spark.sources.fixtures import make_source_files
 from kwage_spark.sources.store import compact_sketch_store, write_sketch_store
 
@@ -84,6 +87,55 @@ def test_checkpoint_roundtrip_and_manifest(spark, corpus, tmp_path):
     # integrity sweep: no crc mismatches
     bad = verify_manifest(states, manifest, list(CFG.group_cols))
     assert bad.empty
+    # state_crc32 is zlib's CRC-32 of the state, the value manifests
+    # written by earlier versions hold, so those still verify
+    rows = states.join(manifest, [*CFG.group_cols, "kind"]).collect()
+    assert len(rows) == sk.count()
+    for r in rows:
+        assert r["state_crc32"] == zlib.crc32(bytes(r["state"])), r["kind"]
+    # a tampered state is the one row returned
+    victim = rows[0]
+    hit = ((F.col("repo") == victim["repo"]) & (F.col("lang") == victim["lang"])
+           & (F.col("kind") == victim["kind"]))
+    tampered = states.withColumn(
+        "state", F.when(hit, F.concat("state", F.lit(bytearray(b"\x00"))))
+        .otherwise(F.col("state")))
+    bad = verify_manifest(tampered, manifest, list(CFG.group_cols))
+    assert [tuple(r) for r in bad[["repo", "lang", "kind"]].itertuples(
+        index=False)] == [(victim["repo"], victim["lang"], victim["kind"])]
+    assert bad["actual_crc32"].iloc[0] == zlib.crc32(
+        bytes(victim["state"]) + b"\x00")
+
+
+def test_checkpoint_crc_plans_run_no_python(spark, corpus, tmp_path,
+                                             monkeypatch):
+    """The manifest write and verify_manifest's check are JVM-only plans."""
+    sk = build_sketches(spark.createDataFrame(corpus), CFG).localCheckpoint()
+    seen = {}
+    writer = type(sk.write)
+    parquet = writer.parquet
+
+    def record_parquet(self, path, *a, **kw):
+        seen[path.rsplit("/", 1)[-1]] = self._df
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(writer, "parquet", record_parquet)
+    path = str(tmp_path / "ckpt")
+    write_checkpoint(sk, path)
+    states, manifest = read_checkpoint(spark, path)
+    frame = type(states)
+    to_pandas = frame.toPandas
+
+    def record_to_pandas(self):
+        seen["verify"] = self
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame, "toPandas", record_to_pandas)
+    assert verify_manifest(states, manifest, list(CFG.group_cols)).empty
+    for name in ("manifest", "verify"):
+        plan = physical_plan(seen[name])
+        assert "Python" not in plan and "InPandas" not in plan \
+            and "InArrow" not in plan, (name, plan)
 
 
 def test_resume_equals_clean_run(spark, corpus, tmp_path):
@@ -342,6 +394,38 @@ def test_merge_states_global_matches_reference(spark):
                 [r[3] for r in mine]), kind
             assert out["n_rows"] == sum(r[4] for r in mine)
             assert out["n_kgrams"] == sum(r[5] for r in mine)
+
+
+
+def _merge_inputs(spark, op):
+    if op == "merge_states_global":
+        df = spark.createDataFrame(_partial_rows(ORDER_FREE, 1, 3),
+                                   PARTIAL_SCHEMA).repartition(4)
+        return merge_states_global(df, "hll")
+    docs = spark.createDataFrame(
+        [(f"g{i % 3}", f"tok{i} tok{i % 5} shared") for i in range(40)],
+        "grp string, text string").repartition(4)
+    if op == "kmv_token_sketches":
+        return kmv_token_sketches(docs, "text", "grp", k=16)
+    return frequent_tokens_mg(docs, "text", k=4)
+
+
+@pytest.mark.parametrize("op", ["merge_states_global", "kmv_token_sketches",
+                                "frequent_tokens_mg"])
+def test_state_merges_run_through_the_arrow_run_merge(spark, op):
+    """Every Python node after the state exchange reads Arrow: the merge
+    is merge_grouped_states' MapInArrow, never a grouped or mapped pandas
+    pass; merge_states_global's per-partition level 1 is one too."""
+    df = _merge_inputs(spark, op)
+    df.collect()
+    names = [n for n, _ in executed_nodes(df)]
+    assert not any("FlatMapGroups" in n for n in names), names
+    after_exchange = names[:names.index("Exchange")]
+    assert "MapInArrow" in after_exchange, names
+    assert not any("Pandas" in n for n in after_exchange), names
+    if op == "merge_states_global":
+        assert names.count("MapInArrow") == 2, names
+        assert not any("Pandas" in n for n in names), names
 
 
 def test_compact_store_merges_appended_groups(spark, tmp_path):

@@ -152,6 +152,21 @@ def test_embedding_near_duplicates(spark, vectors):
     assert (pairs.cosine >= 0.98).all()
 
 
+def test_cosine_rejects_ragged_vectors(spark):
+    """Dims 4 and 8 in separate partitions: each task's bucket UDF sees one
+    dim, and with one plane v and -v fall on opposite sides, so each bucket
+    pairs a dim-4 with a dim-8 vector. The cosine raises, naming both
+    lengths, and so does a brute-force query of the wrong length."""
+    rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, [-1.0, -2.0, -3.0, -4.0]),
+            (2, [1.0] * 8), (3, [-1.0] * 8)]
+    rag = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+                                "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="dim (4 and 8|8 and 4)"):
+        embedding_near_duplicates(rag, threshold=0.0, n_planes=1).collect()
+    with pytest.raises(Exception, match="dim 4 and 3"):
+        cosine_topk(rag.filter(F.col("vec_id") < 2), [1.0, 0.0, 0.0]).collect()
+
+
 def test_cosine_topk_and_ann_agree(spark, vectors, tmp_path):
     qv = vectors.filter(F.col("vec_id") == 0).first()["embedding"]
     exact = cosine_topk(vectors.filter(F.col("vec_id") != 0), qv, k=5).toPandas()

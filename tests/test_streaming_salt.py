@@ -1,4 +1,4 @@
-"""Streaming ingest, windowed streaming aggregation, and salted skew path."""
+"""Streaming ingest and windowed streaming aggregation."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from kwage_spark.config import SketchConfig
 from kwage_spark.kernels import BloomParams
 from kwage_spark.kernels.registry import state_from_bytes
-from kwage_spark.operators.ingest import build_sketches, build_sketches_salted
+from kwage_spark.operators.ingest import build_sketches
 from kwage_spark.sources.fixtures import make_source_files
 from kwage_spark.streaming.ingest_stream import read_merged_state, stream_ingest
 from kwage_spark.streaming.windows import session_windows, windowed_event_counts
@@ -99,13 +99,3 @@ def test_session_windows_batch_shape(spark):
     assert {"user_id", "sess_start", "sess_end", "n_events"} <= set(out.columns)
     assert (out.n_events >= 1).all()
     assert out.groupby("user_id").n_events.sum().sum() == events.count()
-
-
-def test_salted_ingest_equals_unsalted(spark):
-    corpus = make_source_files(n_repos=4, files_per_repo=6, mega_repo_factor=6)
-    files = spark.createDataFrame(corpus)
-    plain = _states(build_sketches(files, CFG))
-    salted = _states(build_sketches_salted(files, CFG, salt_buckets=8))
-    assert plain.keys() == salted.keys()
-    for k in plain:
-        assert plain[k] == salted[k], k
