@@ -36,6 +36,21 @@ _MAGIC = 0x4B575342  # "KWSB"
 _HDR = struct.Struct("<IBBBxIQI")  # magic, ver, log2_m, num_hash, pad, k, n_items, crc32
 
 
+def param_mismatch(op: str, state, params: "BloomParams") -> ValueError:
+    """The one error for a bloom state a reader configured with ``params``
+    cannot read: another (log2_m, num_hash, k), another kind's magic, or a
+    null/truncated state. Decodes whatever header bytes ``state`` has."""
+    state = bytes(state or b"")
+    magic, _ver, l2m, nh, k = struct.unpack("<IBBBxI",
+                                            state[:12].ljust(12, b"\0"))
+    return ValueError(
+        f"{op}: bloom param mismatch: state (magic=0x{magic:08x}, "
+        f"log2_m={l2m}, num_hash={nh}, k={k}, {len(state)} bytes) != cfg "
+        f"(magic=0x{_MAGIC:08x}, log2_m={params.log2_m}, num_hash="
+        f"{params.num_hash}, k={params.k}, {_HDR.size + params.n_bytes} "
+        "bytes); fold() the store or search with the matching SketchConfig")
+
+
 @dataclass(frozen=True)
 class BloomParams:
     """Physical sketch config ≙ reference BloomParam (`bloom.h:546-621`)."""

@@ -36,6 +36,25 @@ def state_from_bytes(data: bytes):
     return cls.from_bytes(data)
 
 
+def decode_column(col, cls=None):
+    """Yield the crc-verified state of each row of an Arrow binary column,
+    one row's bytes at a time: through ``cls.from_bytes`` when given (a
+    state of another kind raises), else by its magic. A null raises."""
+    decode = state_from_bytes if cls is None else cls.from_bytes
+    for v in col:
+        b = v.as_py()
+        if b is None:
+            raise ValueError("null sketch state")
+        yield decode(b)
+
+
+def state_n_items(st) -> int:
+    """Items inserted into a decoded state: its ``n_items``, else its
+    ``n_total`` (CMS, MG), else 0 (KMV keeps no counter)."""
+    n = getattr(st, "n_items", None)
+    return int(n if n is not None else getattr(st, "n_total", 0))
+
+
 def fold_state_blobs(acc, blobs):
     """Decode (crc-checked) each blob and merge it into ``acc`` left to
     right; ``acc`` None starts from the first blob's state. Returns the

@@ -11,20 +11,42 @@ print filter headers). DataFrame analogs:
   * dump_states(df)    — per-row header decode (kind, params, n_items,
     payload bytes), crc-verified, without materializing payloads anywhere.
 
-Both run executor-side (mapInPandas over the joined/selected rows).
+Both run executor-side, in one mapInArrow pass over the joined/selected
+rows that decodes each state once (``registry.decode_column``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.bloom import BloomState
-from ..kernels.registry import state_from_bytes
+from ..kernels.registry import decode_column, state_n_items
+
+
+def _xor_popcount(st_a, st_b) -> int | None:
+    """Differing bits of two Bloom states of one length, else None."""
+    if (isinstance(st_a, BloomState) and isinstance(st_b, BloomState)
+            and st_a.params.log2_m == st_b.params.log2_m):
+        return int(np.unpackbits(np.bitwise_xor(st_a.bits, st_b.bits)).sum())
+    return None
+
+
+def _params(st) -> str:
+    """A decoded state's parameters, as dump_db prints a header."""
+    if isinstance(st, BloomState):
+        return (f"log2_m={st.params.log2_m} num_hash={st.params.num_hash}"
+                f" k={st.params.k}")
+    if hasattr(st, "p"):
+        return f"p={st.p}"
+    if hasattr(st, "log2_w"):
+        return f"log2_w={st.log2_w} depth={st.depth}"
+    if hasattr(st, "delta"):
+        return f"delta={st.delta}"
+    return f"k={st.k}"
 
 
 def sketch_diff(a: DataFrame, b: DataFrame,
@@ -43,31 +65,23 @@ def sketch_diff(a: DataFrame, b: DataFrame,
     schema = (f"{keys}, kind string, status string, equal boolean, "
               "xor_popcount long")
 
-    def diff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                d = r._asdict()
-                sa, sb = d.pop("state_a"), d.pop("state_b")
-                if sa is None or sb is None:
-                    d.update(status="left_only" if sb is None else "right_only",
-                             equal=False, xor_popcount=None)
-                    rows.append(d)
-                    continue
-                ba, bb = bytes(sa), bytes(sb)
-                st_a = state_from_bytes(ba)  # decode = crc verification
-                st_b = state_from_bytes(bb)
-                xpc = None
-                if isinstance(st_a, BloomState) and isinstance(st_b, BloomState):
-                    if st_a.params.log2_m == st_b.params.log2_m:
-                        xpc = int(np.unpackbits(
-                            np.bitwise_xor(st_a.bits, st_b.bits)).sum())
-                d.update(status="both", equal=ba == bb, xor_popcount=xpc)
-                rows.append(d)
-            if rows:
-                yield pd.DataFrame(rows)
+    def diff(batches):
+        for batch in batches:
+            sa, sb = batch.column("state_a"), batch.column("state_b")
+            both = pc.and_(sa.is_valid(), sb.is_valid())
+            xor = pa.array([_xor_popcount(x, y) for x, y in zip(
+                decode_column(sa.filter(both)),
+                decode_column(sb.filter(both)))], pa.int64())
+            status = pc.if_else(sb.is_null(), "left_only", pc.if_else(
+                sa.is_null(), "right_only", "both"))
+            yield pa.RecordBatch.from_arrays(
+                [*(batch.column(c) for c in gk), status,
+                 pc.fill_null(pc.equal(sa, sb), False),
+                 pc.replace_with_mask(pa.nulls(len(both), pa.int64()), both,
+                                      xor)],
+                names=[*gk, "status", "equal", "xor_popcount"])
 
-    return joined.mapInPandas(diff, schema=schema)
+    return joined.mapInArrow(diff, schema=schema)
 
 
 def dump_states(df: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -77,32 +91,20 @@ def dump_states(df: DataFrame, group_cols: list[str]) -> DataFrame:
     keys = ", ".join(f"{c} string" for c in group_cols)
     schema = (f"{keys}, kind string, params string, n_items long, "
               "state_bytes long")
+    cols = group_cols + ["kind"]
 
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                d = {c: getattr(r, c) for c in group_cols}
-                blob = bytes(r.state)
-                st = state_from_bytes(blob)
-                if isinstance(st, BloomState):
-                    params = (f"log2_m={st.params.log2_m} "
-                              f"num_hash={st.params.num_hash} k={st.params.k}")
-                elif hasattr(st, "p"):
-                    params = f"p={st.p}"
-                elif hasattr(st, "log2_w"):
-                    params = f"log2_w={st.log2_w} depth={st.depth}"
-                elif hasattr(st, "delta"):
-                    params = f"delta={st.delta}"
-                else:
-                    params = f"k={st.k}"
-                d.update(kind=r.kind, params=params,
-                         n_items=int(getattr(st, "n_items",
-                                             getattr(st, "n_total", 0))),
-                         state_bytes=len(blob))
-                rows.append(d)
-            if rows:
-                yield pd.DataFrame(rows)
+    def dump(batches):
+        for batch in batches:
+            state = batch.column("state")
+            params, n_items = [], []
+            for st in decode_column(state):
+                params.append(_params(st))
+                n_items.append(state_n_items(st))
+            yield pa.RecordBatch.from_arrays(
+                [*(batch.column(c) for c in cols),
+                 pa.array(params, pa.string()),
+                 pa.array(n_items, pa.int64()),
+                 pc.binary_length(state).cast(pa.int64())],
+                names=[*cols, "params", "n_items", "state_bytes"])
 
-    cols = group_cols + ["kind", "state"]
-    return df.select(*cols).mapInPandas(dump, schema=schema)
+    return df.select(*cols, "state").mapInArrow(dump, schema=schema)

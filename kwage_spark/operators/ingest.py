@@ -571,19 +571,6 @@ def _span_stats(spans, n_input_parts: int, target_parallelism: int
     return max(totals.size, 1), max(span, 1)
 
 
-def _driver_group_stats(paths: list[str], cfg: SketchConfig,
-                        n_input_parts: int, target_parallelism: int
-                        ) -> tuple[int, int] | None:
-    """(n_groups, n_span_effective) computed from the group columns ONLY,
-    driver-side (``_group_spans`` + ``_span_stats``); None if the read
-    fails. A null key is keyed "", as every build mode keys it."""
-    try:
-        return _span_stats(_group_spans(paths, cfg), n_input_parts,
-                           target_parallelism)
-    except Exception:  # noqa: BLE001
-        return None
-
-
 def corpus_stats(src: DataFrame, cfg: SketchConfig,
                  target_parallelism: int | None = None
                  ) -> tuple[int, int, int, int]:

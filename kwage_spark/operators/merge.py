@@ -11,11 +11,13 @@ replaces the pairwise loop. Cross-size merges go through fold() first
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.bloom import BloomState
-from ..kernels.registry import fold_state_blobs, state_from_bytes
+from ..kernels.registry import decode_column, fold_state_blobs
 
 
 #: rows per output Arrow batch of the merge pass — bounds worker memory
@@ -26,7 +28,6 @@ _MERGE_BATCH_ROWS = 256
 def _run_starts(batch, keys: list[str]) -> np.ndarray:
     """Row indices of a key-sorted batch where a new key run begins (row 0
     always does). Two nulls are the same key, as in a groupBy."""
-    import pyarrow.compute as pc
     n = batch.num_rows
     change = np.zeros(n, dtype=bool)
     change[0] = True
@@ -46,7 +47,6 @@ def _merge_runs(names: list[str], keys: list[str]):
     open run holds one decoded state that each blob folds into as it
     arrives, serialized once when the run ends; it is carried across
     batch boundaries, so memory holds one state, not a run's blobs."""
-    import pyarrow as pa
     sums = [c for c in ("n_rows", "n_kgrams") if c in names]
     heads_cols = [c for c in names if c != "state" and c not in sums]
 
@@ -154,30 +154,31 @@ def merge_sketch_tables(a: DataFrame, b: DataFrame, group_cols: list[str]) -> Da
 def fold_bloom_table(df: DataFrame, target_log2_m: int) -> DataFrame:
     """OR-fold every Bloom state to 2^target bits (A4) — makes tables built
     at different filter sizes mergeable. Non-bloom rows pass through."""
-    schema = df.schema
-
     def fold_batch(batches):
-        for pdf in batches:
-            is_bloom = pdf["kind"] == "bloom"
-            if is_bloom.any():
-                pdf = pdf.copy()
-                pdf.loc[is_bloom, "state"] = [
-                    BloomState.from_bytes(bytes(b)).fold(target_log2_m).to_bytes()
-                    for b in pdf.loc[is_bloom, "state"]
-                ]
-            yield pdf
+        for batch in batches:
+            i = batch.schema.get_field_index("state")
+            col = batch.column(i)
+            is_bloom = pc.fill_null(pc.equal(batch.column("kind"), "bloom"),
+                                    False)
+            folded = pa.array([st.fold(target_log2_m).to_bytes() for st in
+                               decode_column(col.filter(is_bloom), BloomState)],
+                              type=col.type)
+            yield batch.set_column(i, "state", pc.replace_with_mask(
+                col, is_bloom, folded))
 
-    return df.mapInPandas(fold_batch, schema=schema)
+    return df.mapInArrow(fold_batch, schema=df.schema)
 
 
 def verify_states(df: DataFrame) -> int:
     """Decode every state (crc32-checked) — ≙ KWAGE's build-time crc sweep
     (`build_db.cpp:144-159`). Returns number of rows verified; raises on
-    corruption."""
+    corruption. The decode runs in an opaque mapInArrow under the count,
+    which Catalyst cannot prune the way it would a projected UDF."""
     def check(batches):
-        for pdf in batches:
-            for b in pdf["state"]:
-                state_from_bytes(bytes(b))
-            yield pdf[[]].assign(ok=1)
+        for batch in batches:
+            for _ in decode_column(batch.column(0)):
+                pass
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.ones(batch.num_rows, np.int32))], ["ok"])
 
-    return df.mapInPandas(check, schema="ok int").count()
+    return df.select("state").mapInArrow(check, schema="ok int").count()

@@ -28,7 +28,6 @@ Semantics replicated exactly:
 
 from __future__ import annotations
 
-import struct
 from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
@@ -36,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import KIND_BLOOM, SketchConfig
-from ..kernels.bloom import _HDR, _MAGIC as _BLOOM_MAGIC, BloomState
+from ..kernels.bloom import (_HDR, _MAGIC as _BLOOM_MAGIC, BloomState,
+                             param_mismatch)
 from ..kernels.shingle import unique_query_hashes
 
 _ = BloomState  # re-exported for callers that parse single states
@@ -105,24 +105,10 @@ class _Queries(NamedTuple):
     qoff: np.ndarray    # (nq + 1,) int64 offsets into flat
 
 
-def _mismatch(op: str, state, cfg: SketchConfig) -> ValueError:
-    """The one error for a bloom row the configured scan cannot read: a
-    different (log2_m, num_hash), another sketch kind labelled bloom, or a
-    null/truncated state. Decodes whatever header bytes the row has."""
-    state = bytes(state or b"")
-    magic, _ver, l2m, nh = struct.unpack("<IBBB", state[:7].ljust(7, b"\0"))
-    return ValueError(
-        f"{op}: state params (magic=0x{magic:08x}, log2_m={l2m}, "
-        f"num_hash={nh}, {len(state)} bytes) != cfg (magic="
-        f"0x{_BLOOM_MAGIC:08x}, log2_m={cfg.bloom.log2_m}, num_hash="
-        f"{cfg.bloom.num_hash}, {_HDR.size + cfg.bloom.n_bytes} bytes); "
-        "fold() the store or search with the matching SketchConfig")
-
-
 def _state_matrix(col, cfg: SketchConfig, op: str) -> np.ndarray:
     """Zero-copy (n, 24 + m/8) uint8 view of an Arrow binary column of
     serialized BloomStates, after checking every row's width (from the
-    offsets) and header (magic, log2_m, num_hash) against cfg. A state
+    offsets) and header (magic, log2_m, num_hash, k) against cfg. A state
     written with other params would otherwise be scanned with the wrong
     mask and return silently wrong counts (heterogeneous stores must
     fold() first). CRC is not re-verified, matching the reference's read
@@ -135,14 +121,14 @@ def _state_matrix(col, cfg: SketchConfig, op: str) -> np.ndarray:
     offs = np.frombuffer(off_buf, dtype=odt)[col.offset:col.offset + n + 1]
     bad = np.flatnonzero(np.diff(offs) != width)  # nulls have width 0
     if bad.size:
-        raise _mismatch(op, col[int(bad[0])].as_py(), cfg)
+        raise param_mismatch(op, col[int(bad[0])].as_py(), cfg.bloom)
     M = np.frombuffer(data_buf, dtype=np.uint8)[
         offs[0]:offs[0] + n * width].reshape(n, width)
-    magic = np.ascontiguousarray(M[:, :4]).view("<u4")[:, 0]
+    magic, k = np.ascontiguousarray(M[:, :12]).view("<u4")[:, [0, 2]].T
     bad = np.flatnonzero((magic != _BLOOM_MAGIC) | (M[:, 5] != cfg.bloom.log2_m)
-                         | (M[:, 6] != cfg.bloom.num_hash))
+                         | (M[:, 6] != cfg.bloom.num_hash) | (k != cfg.bloom.k))
     if bad.size:
-        raise _mismatch(op, M[bad[0]].tobytes(), cfg)
+        raise param_mismatch(op, M[bad[0]].tobytes(), cfg.bloom)
     return M
 
 

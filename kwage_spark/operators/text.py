@@ -1,19 +1,19 @@
 """Text-analysis operators for training-data pipelines.
 
-All hot paths are built-in column expressions (JVM-side, codegen);
-only the winnowing fingerprint needs numpy (mapInPandas, Arrow-batched).
+All hot paths are built-in column expressions (JVM-side, codegen); the
+winnowing fingerprint and the MG/KMV sketch operators run numpy kernels
+in mapInArrow passes.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.murmur3 import murmur3_32_multiseed
+from ..kernels.registry import decode_column
 from ..kernels.shingle import windows_of
 from .merge import merge_grouped_states
 
@@ -86,10 +86,11 @@ def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str,
     position-robust signature set. (id, fingerprints array<bigint>)."""
     seeds = np.asarray([0x4000], dtype=np.uint32)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches):
+        for batch in batches:
             ids, fps = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
+            for rid, text in zip(batch.column(id_col).to_pylist(),
+                                 batch.column(text_col).to_pylist()):
                 w = windows_of(text, k)
                 if w.shape[0] == 0:
                     continue
@@ -102,10 +103,11 @@ def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str,
                 ids.append(rid)
                 fps.append(np.unique(mins).astype(np.int64).tolist())
             if ids:
-                yield pd.DataFrame({id_col: ids, "fingerprints": fps})
+                yield pa.RecordBatch.from_pydict(
+                    {id_col: ids, "fingerprints": fps})
 
     from .util import ensure_parallelism
-    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
         gen, schema=f"{id_col} long, fingerprints array<bigint>")
 
 
@@ -199,34 +201,32 @@ def frequent_tokens_mg(df: DataFrame, text_col: str, k: int = 64) -> DataFrame:
     """
     from collections import Counter
 
-    import pyarrow as pa
-
     from ..kernels.mg import MGState
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches):
         st = MGState(k)
-        for pdf in batches:
+        for batch in batches:
             cnt: Counter = Counter()
-            for text in pdf[text_col]:
+            for text in batch.column(0).to_pylist():
                 cnt.update(text.split())
             if cnt:
                 st.add_items([t.encode("utf-8") for t in cnt],
                              np.fromiter(cnt.values(), dtype=np.int64,
                                          count=len(cnt)))
-        yield pd.DataFrame({"kind": ["mg"], "state": [st.to_bytes()]})
+        yield pa.RecordBatch.from_pydict({"kind": ["mg"],
+                                          "state": [st.to_bytes()]})
 
-    parts = df.select(text_col).mapInPandas(
+    parts = df.select(text_col).mapInArrow(
         partials, schema="kind string, state binary")
     out = pa.schema([("token", pa.string()), ("est_count", pa.int64()),
                      ("max_err", pa.int64())])
 
     def emit(batches):
         for batch in batches:
-            for blob in batch.column("state").to_pylist():
+            for st in decode_column(batch.column("state"), MGState):
                 yield pa.RecordBatch.from_pylist(
                     [{"token": it.decode("utf-8"), "est_count": v,
-                      "max_err": e}
-                     for it, v, e in MGState.from_bytes(blob).estimates()],
+                      "max_err": e} for it, v, e in st.estimates()],
                     schema=out)
 
     return merge_grouped_states(parts, []).mapInArrow(
@@ -244,10 +244,11 @@ def kmv_token_sketches(df: DataFrame, text_col: str, group_col: str,
     from .. import functions as fx
     from ..kernels.kmv import KMVState, hash_items
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def partials(batches):
+        for batch in batches:
             states: dict = {}
-            for g, text in zip(pdf[group_col], pdf[text_col]):
+            for g, text in zip(batch.column(group_col).to_pylist(),
+                               batch.column(text_col).to_pylist()):
                 toks = {t for t in text.split() if t}
                 if not toks:
                     continue
@@ -255,11 +256,14 @@ def kmv_token_sketches(df: DataFrame, text_col: str, group_col: str,
                 st.add_hashes(hash_items([t.encode("utf-8")
                                           for t in toks]))
             if states:
-                yield pd.DataFrame({group_col: list(states), "kind": "kmv",
-                                    "state": [s.to_bytes()
-                                              for s in states.values()]})
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(list(states), pa.string()),
+                     pa.array(["kmv"] * len(states)),
+                     pa.array([s.to_bytes() for s in states.values()],
+                              pa.binary())],
+                    names=[group_col, "kind", "state"])
 
-    parts = df.select(group_col, text_col).mapInPandas(
+    parts = df.select(group_col, text_col).mapInArrow(
         partials, schema=f"{group_col} string, kind string, state binary")
     return (merge_grouped_states(parts, [group_col])
             .select(group_col, "state",
@@ -294,9 +298,9 @@ def kmv_group_overlap(sketches: DataFrame, group_col: str,
     # non-nullable (verified by the r5 advisor: 6 groups, max_groups=3,
     # no raise). No expression-level anchoring is optimizer-proof here,
     # so the guard is now a DATA column: the one-row count broadcast-
-    # cross-joins into the pair stage and the mapInPandas scorer raises
+    # cross-joins into the pair stage and the mapInArrow scorer raises
     # on its value — Spark cannot prune columns through an opaque
-    # mapInPandas, and the first batch raises before meaningful O(G²)
+    # mapInArrow, and the first batch raises before meaningful O(G²)
     # work (the same in-plan, no-extra-driver-action property).
     guard = sketches.agg(F.count(F.lit(1)).alias("_g"))
     a = sketches.select(F.col(group_col).alias("group_a"),
@@ -307,28 +311,27 @@ def kmv_group_overlap(sketches: DataFrame, group_col: str,
              .crossJoin(F.broadcast(guard))
              .select("group_a", "group_b", "_sa", "_sb", "_g"))
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) and int(pdf["_g"].iat[0]) > max_groups:
+    def score(batches):
+        for batch in batches:
+            n_groups = batch.column("_g")[0].as_py() if batch.num_rows else 0
+            if n_groups > max_groups:
                 raise RuntimeError(
-                    f"kmv_group_overlap: {int(pdf['_g'].iat[0])} groups "
+                    f"kmv_group_overlap: {n_groups} groups "
                     f"exceeds max_groups={max_groups} — the all-pairs "
                     "join is O(G^2); filter the sketch table or raise "
                     "max_groups deliberately")
-            out = {"group_a": [], "group_b": [], "jaccard_est": [],
-                   "intersection_est": []}
-            for ga, gb, sa, sb in zip(pdf["group_a"], pdf["group_b"],
-                                      pdf["_sa"], pdf["_sb"]):
-                ka = KMVState.from_bytes(bytes(sa))
-                kb = KMVState.from_bytes(bytes(sb))
-                out["group_a"].append(ga)
-                out["group_b"].append(gb)
-                out["jaccard_est"].append(KMVState.jaccard(ka, kb))
-                out["intersection_est"].append(
-                    KMVState.intersection_estimate(ka, kb))
-            yield pd.DataFrame(out)
+            jac, inter = [], []
+            for ka, kb in zip(decode_column(batch.column("_sa"), KMVState),
+                              decode_column(batch.column("_sb"), KMVState)):
+                jac.append(KMVState.jaccard(ka, kb))
+                inter.append(KMVState.intersection_estimate(ka, kb))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("group_a"), batch.column("group_b"),
+                 pa.array(jac, pa.float64()), pa.array(inter, pa.float64())],
+                names=["group_a", "group_b", "jaccard_est",
+                       "intersection_est"])
 
-    return pairs.mapInPandas(
+    return pairs.mapInArrow(
         score, schema="group_a string, group_b string, "
                       "jaccard_est double, intersection_est double")
 

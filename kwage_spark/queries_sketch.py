@@ -127,7 +127,7 @@ def sketch_build_metrics(spark, sf_dir):
 
 @register("hll_distinct_kgrams")  # A15 — HLL estimate per group
 def hll_distinct_kgrams(spark, sf_dir):
-    """Estimates computed EXECUTOR-SIDE via the fx.hll_estimate pandas UDF
+    """Estimates computed EXECUTOR-SIDE via the fx.hll_estimate Arrow UDF
     — no state blob ever reaches the driver (at 10⁶ groups the old
     toPandas() decode was ~GBs through one process)."""
     sk = doc_sketches(spark, sf_dir).filter(F.col("kind") == "hll")

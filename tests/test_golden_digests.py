@@ -148,9 +148,17 @@ def compute_digests(spark, tmp) -> dict:
     assert sum(own) == int((pdf["repo"].fillna("") == "").sum())
     assert not any(r.repo is None for r in rows)
 
-    partial = build_sketches(df, CFG, combine="partial").cache()
+    # 3-row Arrow batches: a group's partials reach the merge in runs
+    # that cross batch boundaries
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_rows = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        partial = build_sketches(df, CFG, combine="partial")
+        out["build_partial"] = _digest(_states(partial, ORDER_FREE))
+    finally:
+        spark.conf.set(key, old_rows)
     raw = build_sketches(df, CFG, combine="raw").cache()
-    out["build_partial"] = _digest(_states(partial, ORDER_FREE))
     out["build_raw"] = _digest(_states(raw, ORDER_FREE))
 
     store = str(tmp / "store")
@@ -202,7 +210,7 @@ def compute_digests(spark, tmp) -> dict:
                                        .collect())
     out["winnowing"] = _digest(
         winnowing_fingerprints(df, "id", "content").collect())
-    for d in (closed, partial, raw, extra, kmv):
+    for d in (closed, raw, extra, kmv):
         d.unpersist()
     return out
 

@@ -201,6 +201,29 @@ def test_search_rejects_mismatched_filter_params(spark, sketches):
         res.collect()
 
 
+@pytest.mark.parametrize("reader", ["search", "bloom_contains"])
+def test_bloom_readers_reject_another_k(spark, sketches, reader):
+    """k is a filter param like log2_m and num_hash: probing a store built
+    at k=8 with k=6 hashes other grams, so it must raise, not return no
+    rows (search) or 0 found k-grams (bloom_contains)."""
+    from kwage_spark import functions as fx
+    other = BloomParams(k=CFG.bloom.k - 2, log2_m=CFG.bloom.log2_m,
+                        num_hash=CFG.bloom.num_hash)
+    snippet = "the quick brown fox jumps"
+    if reader == "search":
+        bad = SketchConfig(group_cols=CFG.group_cols,
+                           content_col=CFG.content_col, bloom=other)
+        res = containment_search(sketches, [(0, snippet)], bad, threshold=0.1)
+    else:
+        res = (sketches.filter(F.col("kind") == "bloom")
+               .select(fx.bloom_contains("state", snippet, other)))
+    with pytest.raises(Exception, match="ValueError") as e:
+        res.collect()
+    assert "param mismatch" in str(e.value)
+    assert f"k={CFG.bloom.k}, " in str(e.value)
+    assert f"k={other.k}, " in str(e.value)
+
+
 def test_ingest_handles_null_and_empty_edges(spark):
     """0-kgram rows, null content, and null group keys must not kill tasks
     (Arrow data buffer can be None; null keys are keyed as '')."""
@@ -307,7 +330,7 @@ def test_driver_group_stats_matches_counter(tmp_path, n_input_parts, target):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kwage_spark.operators.ingest import _driver_group_stats
+    from kwage_spark.operators.ingest import _group_spans, _span_stats
     rng = np.random.default_rng(11)
     paths = []
     for f in range(2):
@@ -334,5 +357,5 @@ def test_driver_group_stats_matches_counter(tmp_path, n_input_parts, target):
     if n_input_parts < target:
         span = sum(min(r, target) for r in counts.values())
     assert any(None in k for k in counts)
-    assert _driver_group_stats(paths, CFG, n_input_parts, target) == \
+    assert _span_stats(_group_spans(paths, CFG), n_input_parts, target) == \
         (len(counts), span)
