@@ -52,41 +52,27 @@ def main() -> None:
     files = spark.read.parquet(args.input)
     n_files = files.count()
 
-    # Resolve the combine strategy + shuffle width ONCE outside the timed
-    # loop: the stats scan stands in for table/column statistics, which a
-    # production deployment reads from the catalog, not per job.
-    from kwage_spark.operators.ingest import (
-        choose_combine, corpus_stats, raw_shuffle_partitions)
-    stats = corpus_stats(files, cfg)
-    combine = choose_combine(files, cfg, cores, stats)
-    # data-sized shuffle width for the raw-mode content shuffle; partial
-    # mode keeps the input partitioning (no raw-content shuffle at all)
-    n_part = raw_shuffle_partitions(stats[2], cores) if combine == "raw" else None
-
     # Warm the Python worker pool: real clusters run long-lived executors,
-    # so per-worker interpreter spawn + numpy/pandas import is not part of
+    # so per-worker interpreter spawn + numpy/pyarrow import is not part of
     # steady-state throughput. One tiny pass per core touches every worker.
     warm = spark.range(cores * 4).repartition(cores * 2)
 
     def _touch(batches):
         import numpy as _np  # noqa: F401  (forces the heavy imports)
         import kwage_spark.kernels as _k  # noqa: F401
-        for pdf in batches:
-            yield pdf
+        yield from batches
 
-    warm.mapInPandas(_touch, schema="id long").count()
+    warm.mapInArrow(_touch, schema="id long").count()
 
     # min over reps: the cleanest estimator of achievable time on a
     # noisy shared host (same practice as JMH/criterion)
     t_ingest = float("inf")
     for _rep in range(args.reps):
         t0 = time.perf_counter()
-        n_states = build_sketches(files, cfg, combine=combine,
-                                  repartition=n_part).count()
+        n_states = build_sketches(files, cfg).count()
         t_ingest = min(t_ingest, time.perf_counter() - t0)
 
-    sk = build_sketches(files, cfg, combine=combine,
-                        repartition=n_part).persist()
+    sk = build_sketches(files, cfg).persist()
     sk.count()
     queries = [(i, FLAGSHIP_SNIPPET + f" probe {i}") for i in range(args.searches)]
     t_search = float("inf")

@@ -12,8 +12,9 @@ The scalable form is the classic two-pass global rank:
      sampler) and pin the layout with persist();
   2. count rows per partition (a tiny n_partitions-row action), prefix-sum
      the counts driver-side, broadcast the offsets;
-  3. per partition, rank = partition_offset + local position (mapInPandas,
-     zero further shuffle).
+  3. per partition, rank = partition_offset + local position, appended to
+     each Arrow batch with every other column passed through untouched
+     (mapInArrow, zero further shuffle).
 
 Rows with equal keys may order arbitrarily among themselves (same contract
 as row_number); with unique keys the result equals the window exactly.
@@ -24,7 +25,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,16 +63,17 @@ def global_row_number(df: DataFrame, key_col: str,
     schema = T.StructType(list(ranged.schema.fields)
                           + [T.StructField(rank_col, T.LongType())])
 
-    def add_rank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def add_rank(batches: Iterator[pa.RecordBatch]
+                 ) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         pos = boff.value.get(ctx.partitionId() if ctx else 0, 0)
-        for pdf in batches:
-            out = pdf.copy()
-            out[rank_col] = np.arange(pos, pos + len(pdf), dtype="int64")
-            pos += len(pdf)
-            yield out
+        for batch in batches:
+            n = batch.num_rows
+            yield batch.append_column(
+                rank_col, pa.array(np.arange(pos, pos + n, dtype=np.int64)))
+            pos += n
 
-    return ranged.mapInPandas(add_rank, schema=schema)
+    return ranged.mapInArrow(add_rank, schema=schema)
 
 
 def chunked_ids(df: DataFrame, key_col: str, chunk_size: int = 2048,

@@ -21,7 +21,7 @@ import logging
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from ..kernels.murmur3 import murmur3_32_multiseed
 from ..kernels.shingle import windows_of
 from .caching import persist_tracked
-from .util import cosine, ensure_parallelism
+from .util import (cosine, ensure_parallelism, matrix_list, string_ranges,
+                   vector_matrix)
 
 logger = logging.getLogger(__name__)
 
@@ -101,12 +102,14 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        max_stacked: int = MAX_STACKED_WINDOWS) -> DataFrame:
     """(id, sig array<bigint>) — sig[i] = min over k-grams of murmur(gram, seed_i).
 
-    No per-document Python loop in the hash path. Native path: one FUSED
-    sliding-window + per-seed-min C call per Arrow batch over the
-    concatenated document bytes (`_native.sliding_ranges_minhash`) — the
-    (n_windows x num_perm) hash matrix is never materialized, block
-    mixing is shared across overlapping windows, and memory traffic is
-    O(bytes), not O(windows x perms x 4). Numpy fallback: stack every
+    No per-document Python loop in the hash path. Both paths read each
+    document's bytes in place from the Arrow batch's string buffer
+    (``util.string_ranges``). Native path: one FUSED sliding-window +
+    per-seed-min C call per Arrow batch over that buffer
+    (`_native.sliding_ranges_minhash`) — the (n_windows x num_perm) hash
+    matrix is never materialized, block mixing is shared across
+    overlapping windows, and memory traffic is O(bytes), not
+    O(windows x perms x 4). Numpy fallback: stack every
     document's (exactly k-byte) window matrix into one kernel call and
     take per-document minima over segment slices, flushing at
     ``MAX_STACKED_WINDOWS`` rows to bound the hash temp. Both paths are
@@ -115,62 +118,51 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     """
     seeds = (MINHASH_SEED_BASE + np.arange(num_perm)).astype(np.uint32)
 
-    def flush_numpy(ids: list, mats: list[np.ndarray], counts: list[int]
-                    ) -> pd.DataFrame:
+    def minima(mats: list[np.ndarray], counts: list[int]) -> np.ndarray:
         stacked = mats[0] if len(mats) == 1 else np.concatenate(mats, axis=0)
         h = murmur3_32_multiseed(stacked, seeds)        # (N, num_perm)
         bounds = np.zeros(len(counts) + 1, dtype=np.int64)
         np.cumsum(counts, out=bounds[1:])
-        mins = np.stack([h[s:e].min(axis=0)
+        return np.stack([h[s:e].min(axis=0)
                          for s, e in zip(bounds[:-1], bounds[1:])])
-        return pd.DataFrame({id_col: ids,
-                             "sig": mins.astype(np.int64).tolist()})
 
-    def gen_numpy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            mats: list[np.ndarray] = []
-            counts: list[int] = []
-            stacked_rows = 0
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                w = windows_of(text, k)
-                if w.shape[0] == 0:
-                    continue
-                ids.append(rid)
-                mats.append(w)
-                counts.append(w.shape[0])
-                stacked_rows += w.shape[0]
-                if stacked_rows >= max_stacked:
-                    yield flush_numpy(ids, mats, counts)
-                    ids, mats, counts, stacked_rows = [], [], [], 0
-            if ids:
-                yield flush_numpy(ids, mats, counts)
+    def sigs_numpy(buf, starts, lens):
+        rows: list[int] = []
+        mats: list[np.ndarray] = []
+        counts: list[int] = []
+        stacked_rows = 0
+        for i in np.nonzero(lens >= k)[0].tolist():
+            w = windows_of(buf[starts[i]:starts[i] + lens[i]], k)
+            rows.append(i)
+            mats.append(w)
+            counts.append(w.shape[0])
+            stacked_rows += w.shape[0]
+            if stacked_rows >= max_stacked:
+                yield rows, minima(mats, counts)
+                rows, mats, counts, stacked_rows = [], [], [], 0
+        if rows:
+            yield rows, minima(mats, counts)
 
-    def gen_native(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import _native
-        for pdf in batches:
-            raw = [t.encode("utf-8", "surrogatepass")
-                   for t in pdf[text_col]]
-            lens = np.fromiter((len(b) for b in raw), dtype=np.int64,
-                               count=len(raw))
-            keep = np.nonzero(lens >= k)[0]
-            if keep.size == 0:
+    def sigs_native(buf, starts, lens):
+        keep = np.nonzero(lens >= k)[0]
+        if keep.size:
+            yield keep, _native.sliding_ranges_minhash(
+                buf, starts[keep], lens[keep], k, seeds)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            buf = np.frombuffer(b"".join(raw[i] for i in keep),
-                                dtype=np.uint8)
-            klens = lens[keep]
-            starts = np.zeros(keep.size, dtype=np.int64)
-            np.cumsum(klens[:-1], out=starts[1:])
-            sigs = _native.sliding_ranges_minhash(buf, starts, klens, k,
-                                                  seeds)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[keep],
-                 "sig": sigs.astype(np.int64).tolist()})
+            for rows, sigs in signatures(*string_ranges(batch.column(1))):
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(0).take(rows).cast(pa.int64()),
+                     matrix_list(sigs.astype(np.int64))],
+                    names=[id_col, "sig"])
 
     from ..kernels import _native
     native = _native.HAVE_NATIVE if use_native is None else use_native
-    gen = gen_native if native else gen_numpy
-    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
+    signatures = sigs_native if native else sigs_numpy
+    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
         gen, schema=f"{id_col} long, sig array<bigint>")
 
 
@@ -282,13 +274,13 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     BENCH/BASELINE.md)."""
     from collections import Counter
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows: list[int] = []
             tokens: list[bytes] = []
             weights: list[np.ndarray] = []
             starts: list[int] = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
+            for i, text in enumerate(batch.column(1).to_pylist()):
                 counts = Counter(text.split())
                 if not counts:
                     continue
@@ -297,8 +289,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                               for t in counts)
                 weights.append(np.fromiter(counts.values(), dtype=np.int32,
                                            count=len(counts)))
-                ids.append(rid)
-            if not ids:
+                rows.append(i)
+            if not rows:
                 continue
             h64 = _hash_tokens_64(tokens)                     # (n_tok,)
             starts_a = np.asarray(starts)
@@ -314,10 +306,12 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             sig_bits = sums > 0
             packed = np.packbits(sig_bits[:, ::-1], axis=1)
             sigs = np.ascontiguousarray(packed).view(">u8").ravel()
-            yield pd.DataFrame({id_col: ids,
-                                "simhash": sigs.astype(np.int64)})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(rows).cast(pa.int64()),
+                 pa.array(sigs.astype(np.int64))],
+                names=[id_col, "simhash"])
 
-    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
         gen, schema=f"{id_col} long, simhash bigint")
 
 
@@ -369,36 +363,39 @@ def hyperplanes(dim: int, n_planes: int) -> np.ndarray:
         (n_planes, dim))
 
 
+def sign_pattern(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """The int64 hyperplane sign pattern of each row of ``mat``: bit i is
+    set when the row lies on the positive side of ``planes[i]``."""
+    return ((mat @ planes.T) > 0) @ (1 << np.arange(len(planes),
+                                                   dtype=np.int64))
+
+
 def hyperplane_bucket_udf(n_planes: int):
-    """pandas UDF: an array column → its hyperplane sign pattern (long).
+    """Arrow UDF: an array column → its hyperplane sign pattern (long).
 
     The planes are derived EXECUTOR-side from the batch's vector length,
     so callers need no eager ``.first()`` dimension probe and no driver
-    broadcast. They are derived once per task, and a task that sees a
-    second dim raises: a ragged column would otherwise bucket different
-    batches under different plane sets. Dims that differ across tasks are
-    the caller's to catch (``build_vector_index`` observes them)."""
+    broadcast. They are derived once per task, and a batch or task that
+    sees a second dim raises: a ragged column would otherwise bucket
+    different batches under different plane sets. Dims that differ
+    across tasks are the caller's to catch (``build_vector_index``
+    observes them)."""
     planes_by_dim: dict[int, np.ndarray] = {}
 
-    @F.pandas_udf("long")
-    def bucket_of(vecs: pd.Series) -> pd.Series:
+    def bucket_of(vecs: pa.Array) -> pa.Array:
         if not len(vecs):
-            return pd.Series([], dtype="int64")
-        mat = np.stack(vecs.to_numpy())
-        dim = mat.shape[1]
-        p = planes_by_dim.get(dim)
-        if p is None:
-            if planes_by_dim:
-                raise ValueError(
-                    f"hyperplane bucketing saw vectors of dim {dim} after "
-                    f"dim {next(iter(planes_by_dim))}: the embedding "
-                    "column is ragged; fix the input — buckets would "
-                    "silently come from different plane sets")
-            p = planes_by_dim[dim] = hyperplanes(dim, n_planes)
-        signs = (mat @ p.T) > 0
-        return pd.Series((signs * (1 << np.arange(p.shape[0]))).sum(axis=1)
-                         .astype(np.int64))
-    return bucket_of
+            return pa.array([], pa.int64())
+        mat, lens = vector_matrix(vecs)
+        dims = sorted({*planes_by_dim, *np.unique(lens).tolist()})
+        if len(dims) > 1:
+            raise ValueError(
+                f"hyperplane bucketing saw vectors of dim {dims[0]} and "
+                f"{dims[1]}: the embedding column is ragged; fix the input "
+                "— buckets would silently come from different plane sets")
+        if dims[0] not in planes_by_dim:
+            planes_by_dim[dims[0]] = hyperplanes(dims[0], n_planes)
+        return pa.array(sign_pattern(mat, planes_by_dim[dims[0]]))
+    return F.arrow_udf(bucket_of, "long")
 
 
 def embedding_near_duplicates(df: DataFrame, id_col: str = "vec_id",

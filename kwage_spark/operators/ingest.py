@@ -50,8 +50,8 @@ objects, no pandas materialization, on the hot path.
       (a filter, join or computed column over the scan, a column that
       lives in partition dirs, remote files, a column type pyarrow reads
       differently from Spark), when it has more files than FOOTER_FILE_CAP
-      or group columns over GROUP_STATS_DRIVER_BUDGET, when ``repartition``
-      or an explicit ``combine`` is given, and when
+      or group columns over GROUP_STATS_DRIVER_BUDGET, when an explicit
+      ``combine`` is given, and when
         * the largest piece holds more than content_bytes /
           defaultParallelism: a round-robin layout (row group 0 owns every
           group) or a single row group would leave one task building it;
@@ -178,18 +178,6 @@ def _feed_group_ranges(states: dict[str, object], cfg: SketchConfig,
     return n_kgrams
 
 
-def _content_buf(batch, cfg: SketchConfig):
-    """Content column's raw data buffer as uint8, or None for a 0-row
-    batch; an all-empty/all-null column (None data buffer) yields an empty
-    array so offset math still works."""
-    if batch.num_rows == 0:
-        return None
-    dbuf = batch.column(
-        batch.schema.get_field_index(cfg.content_col)).buffers()[2]
-    return (np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None
-            else np.empty(0, dtype=np.uint8))
-
-
 def _group_key(tbl, cfg: SketchConfig):
     """One string per row of ``tbl`` (a RecordBatch or Table) naming its
     group, as every build mode keys it: the group columns cast to string,
@@ -204,31 +192,23 @@ def _group_key(tbl, cfg: SketchConfig):
 
 
 def _arrow_groups(batch, cfg: SketchConfig):
-    """Yield (key_tuple, starts, lens, sizes, n_rows) for each group in a
-    pyarrow.RecordBatch, touching only Arrow buffers + numpy.
+    """Yield (key_tuple, ranges, n_rows, meta) for each group in a
+    pyarrow.RecordBatch, touching only Arrow buffers + numpy; ``ranges``
+    is ``_feed_group_ranges``' (buf, starts, lens, sizes) of the group's
+    rows in the content column's data buffer.
 
     Group discovery: dictionary-encode the concatenated group key, then a
     stable argsort of the code array gives contiguous index runs per
     group (the per-batch equivalent of a sort-based aggregate)."""
     import pyarrow as pa
     import pyarrow.compute as pc
+    from .util import string_ranges
 
     n = batch.num_rows
     if n == 0:
         return
-    content = batch.column(batch.schema.get_field_index(cfg.content_col))
-    if pa.types.is_large_string(content.type) or \
-            pa.types.is_large_binary(content.type):
-        odt = np.int64
-    else:
-        odt = np.int32
-    off_buf, data_buf = content.buffers()[1], content.buffers()[2]
-    offs = np.frombuffer(off_buf, dtype=odt)[content.offset:content.offset + n + 1]
-    # all-empty / all-null string columns carry a None data buffer
-    buf = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
-           else np.empty(0, dtype=np.uint8))
-    starts_all = offs[:-1].astype(np.int64)
-    lens_all = np.diff(offs).astype(np.int64)
+    buf, starts_all, lens_all = string_ranges(
+        batch.column(batch.schema.get_field_index(cfg.content_col)))
 
     if cfg.size_col is not None:
         sizes_all = batch.column(
@@ -258,8 +238,8 @@ def _arrow_groups(batch, cfg: SketchConfig):
             meta = {c: (a[i0].as_py() or "") for c, a in mcols.items()}
         else:
             meta = None
-        yield (key_tuple, starts_all[ix], lens_all[ix], sizes_all[ix],
-               re - rs, meta)
+        ranges = (buf, starts_all[ix], lens_all[ix], sizes_all[ix])
+        yield key_tuple, ranges, re - rs, meta
 
 
 def _arrow_gen_partials(cfg: SketchConfig):
@@ -270,14 +250,9 @@ def _arrow_gen_partials(cfg: SketchConfig):
     def gen_partials(batches):
         def entries():
             for batch in batches:
-                buf = _content_buf(batch, cfg)
-                if buf is None:
-                    continue
-                for key, starts, lens, sizes, n_rows, meta in \
-                        _arrow_groups(batch, cfg):
+                for key, ranges, n_rows, meta in _arrow_groups(batch, cfg):
                     states = _new_states(cfg)
-                    n_kgrams = _feed_group_ranges(states, cfg, buf,
-                                                  starts, lens, sizes)
+                    n_kgrams = _feed_group_ranges(states, cfg, *ranges)
                     yield key, states, n_rows, n_kgrams, meta
         return _state_batches(entries(), cfg)
 
@@ -291,17 +266,12 @@ def _final_states(batches, cfg: SketchConfig):
     × state size), never raw rows."""
     acc: dict[tuple, list] = {}
     for batch in batches:
-        buf = _content_buf(batch, cfg)
-        if buf is None:
-            continue
-        for key, starts, lens, sizes, n_rows, meta in \
-                _arrow_groups(batch, cfg):
+        for key, ranges, n_rows, meta in _arrow_groups(batch, cfg):
             entry = acc.get(key)
             if entry is None:
                 entry = acc[key] = [_new_states(cfg), 0, 0, meta]
             entry[1] += n_rows
-            entry[2] += _feed_group_ranges(entry[0], cfg, buf,
-                                           starts, lens, sizes)
+            entry[2] += _feed_group_ranges(entry[0], cfg, *ranges)
     yield from _state_batches(((key, *e) for key, e in acc.items()), cfg)
 
 
@@ -812,8 +782,7 @@ def _closed_units(units: list, columns: list[str], cfg: SketchConfig,
 
 
 def build_sketches(df: DataFrame, cfg: SketchConfig,
-                   combine: str = "auto",
-                   repartition: int | None = None) -> DataFrame:
+                   combine: str = "auto") -> DataFrame:
     """df(source_files) -> DataFrame[group_cols…, kind, state, n_rows, n_kgrams].
 
     Column-prunes to exactly the needed inputs before any UDF so the
@@ -826,15 +795,13 @@ def build_sketches(df: DataFrame, cfg: SketchConfig,
         raise ValueError(f"unknown combine mode {combine!r}")
     src = _select_inputs(df, cfg)
     spark = df.sparkSession
-    n_shuffle = int(repartition or spark.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     stats = None
     decision: dict = {"reason": "explicit combine"}
     if combine == "auto":
         stats, layout = _corpus_stats(src, cfg)
         combine = choose_combine(src, cfg, n_shuffle, stats)
-        if repartition:
-            decision = {"reason": "repartition given"}
-        elif isinstance(layout, str):
+        if isinstance(layout, str):
             decision = {"reason": layout}
         else:
             closed, decision = _closed_plan(
@@ -847,26 +814,22 @@ def build_sketches(df: DataFrame, cfg: SketchConfig,
     schema = sketch_schema(cfg)
 
     if combine == "partial":
-        if repartition:
-            src = src.repartition(repartition)
-        else:
-            # partial mode inherits the INPUT partitioning — a thin input
-            # (single-file table, one row group) would serialize all the
-            # hashing on one task. Widen to the session parallelism; a
-            # no-op at real scale (guide §2.5 unsplittable-input fix).
-            # Partitioning-invariance of the merge keeps results
-            # byte-identical (tested).
-            from .util import ensure_parallelism
-            src = ensure_parallelism(src)
+        # partial mode inherits the INPUT partitioning — a thin input
+        # (single-file table, one row group) would serialize all the
+        # hashing on one task. Widen to the session parallelism; a no-op
+        # at real scale (guide §2.5 unsplittable-input fix).
+        # Partitioning-invariance of the merge keeps results
+        # byte-identical (tested).
+        from .util import ensure_parallelism
+        src = ensure_parallelism(src)
         partials = src.mapInArrow(_arrow_gen_partials(cfg), schema=schema)
         return merge_grouped_states(partials, gcols)
 
-    if repartition is None:
-        # scale the shuffle width with content volume (one narrow stats
-        # scan unless the caller already supplied partitioning)
-        if stats is None:
-            stats = corpus_stats(src, cfg)
-        n_shuffle = raw_shuffle_partitions(stats[2], n_shuffle)
+    # scale the shuffle width with content volume (one narrow stats scan
+    # unless auto mode already ran it)
+    if stats is None:
+        stats = corpus_stats(src, cfg)
+    n_shuffle = raw_shuffle_partitions(stats[2], n_shuffle)
     # hash the key as _arrow_groups keys it (a null is ""), so a null and
     # a "" of one group land in one partition and build one row
     keyed = src.repartition(n_shuffle, *[

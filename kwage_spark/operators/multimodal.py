@@ -20,9 +20,13 @@ import wave
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
+
+from .util import ensure_parallelism
 
 MEDIA_SCHEMA = ("media_id long, modality string, payload binary, "
                 "mime string, meta map<string,string>")
@@ -124,9 +128,27 @@ def make_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
+def _map_rows(df: DataFrame, schema: str, rows) -> DataFrame:
+    """One mapInArrow pass over ``df``: ``rows(*values)`` of each input row
+    (its values in ``df``'s column order) yields that row's output rows,
+    as tuples in ``schema``'s column order."""
+    arrow = to_arrow_schema(DataType.fromDDL(schema))
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = [r for values in zip(*batch.to_pydict().values())
+                   for r in rows(*values)]
+            cols = list(zip(*out)) or [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                schema=arrow)
+
+    return ensure_parallelism(df).mapInArrow(gen, schema=schema)
+
+
 def decode_and_featurize(df: DataFrame, fake: bool = False,
                          feat_dim: int = 16) -> DataFrame:
-    """payload -> (width, height, features array<float>) via mapInPandas.
+    """payload -> (width, height, features array<float>) via mapInArrow.
 
     Real decode for codec-free formats: 'BM…' payloads decode as
     uncompressed BMP (width/height = pixel dims, image descriptors as
@@ -140,45 +162,32 @@ def decode_and_featurize(df: DataFrame, fake: bool = False,
     The Spark contract either way: binary in, fixed-width float vector
     out, Arrow-batched, partition-parallel.
     """
-    schema = ("media_id long, modality string, width int, height int, "
-              f"features array<float>")
+    def rows(media_id, modality, raw_b: bytes):
+        if fake:
+            raw = np.frombuffer(raw_b, dtype=np.uint8)
+            # deterministic fake: dims + features from payload bytes
+            width, height = int(raw[0]) + 1, int(raw[1]) + 1
+            feats = (raw[: feat_dim * 4].reshape(feat_dim, 4)
+                     .sum(axis=1) / 255.0).astype(np.float32)
+        elif raw_b[:2] == b"BM":
+            rgb = decode_bmp(raw_b)
+            height, width = rgb.shape[0], rgb.shape[1]
+            feats = _image_features(rgb, feat_dim)
+        elif raw_b[:4] == b"RIFF" and raw_b[8:12] == b"WAVE":
+            rate, nch, sig = decode_wav(raw_b)
+            width, height = rate, nch
+            feats = _audio_features(rate, sig, feat_dim)
+        else:
+            raise NotImplementedError(
+                "compressed media decode (PNG/JPEG/MP3/MP4) needs "
+                "PIL/librosa/ffmpeg — not in this container; BMP "
+                "and PCM WAV decode natively, or pass fake=True "
+                "for the deterministic stub")
+        yield media_id, modality, width, height, feats.tolist()
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "modality": [], "width": [],
-                   "height": [], "features": []}
-            for rid, mod, payload in zip(pdf["media_id"], pdf["modality"],
-                                         pdf["payload"]):
-                raw_b = bytes(payload)
-                if fake:
-                    raw = np.frombuffer(raw_b, dtype=np.uint8)
-                    # deterministic fake: dims + features from payload bytes
-                    width, height = int(raw[0]) + 1, int(raw[1]) + 1
-                    feats = (raw[: feat_dim * 4].reshape(feat_dim, 4)
-                             .sum(axis=1) / 255.0).astype(np.float32)
-                elif raw_b[:2] == b"BM":
-                    rgb = decode_bmp(raw_b)
-                    height, width = rgb.shape[0], rgb.shape[1]
-                    feats = _image_features(rgb, feat_dim)
-                elif raw_b[:4] == b"RIFF" and raw_b[8:12] == b"WAVE":
-                    rate, nch, sig = decode_wav(raw_b)
-                    width, height = rate, nch
-                    feats = _audio_features(rate, sig, feat_dim)
-                else:
-                    raise NotImplementedError(
-                        "compressed media decode (PNG/JPEG/MP3/MP4) needs "
-                        "PIL/librosa/ffmpeg — not in this container; BMP "
-                        "and PCM WAV decode natively, or pass fake=True "
-                        "for the deterministic stub")
-                out["media_id"].append(rid)
-                out["modality"].append(mod)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["features"].append(feats.tolist())
-            yield pd.DataFrame(out)
-
-    from .util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(gen, schema=schema)
+    return _map_rows(df.select("media_id", "modality", "payload"),
+                     "media_id long, modality string, width int, "
+                     "height int, features array<float>", rows)
 
 
 def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -186,46 +195,28 @@ def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     (media_id, width, height, rgb binary: out_h×out_w×3 row-major RGB).
     The standard normalize-to-fixed-dims step before a vision encoder,
     done with pure numpy indexing — no codec, no Python per-pixel loop."""
-    schema = "media_id long, width int, height int, rgb binary"
+    def rows(media_id, payload: bytes):
+        rgb = decode_bmp(payload)
+        ys = (np.arange(out_h) * rgb.shape[0]) // out_h
+        xs = (np.arange(out_w) * rgb.shape[1]) // out_w
+        yield media_id, out_w, out_h, rgb[ys][:, xs].tobytes()
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [], "rgb": []}
-            for rid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rgb = decode_bmp(bytes(payload))
-                ys = (np.arange(out_h) * rgb.shape[0]) // out_h
-                xs = (np.arange(out_w) * rgb.shape[1]) // out_w
-                small = rgb[ys][:, xs]
-                rows["media_id"].append(rid)
-                rows["width"].append(out_w)
-                rows["height"].append(out_h)
-                rows["rgb"].append(bytearray(small.tobytes()))
-            yield pd.DataFrame(rows)
-
-    from .util import ensure_parallelism
-    return (ensure_parallelism(df.filter(F.col("modality") == "image"))
-            .mapInPandas(gen, schema=schema))
+    return _map_rows(df.filter(F.col("modality") == "image")
+                     .select("media_id", "payload"),
+                     "media_id long, width int, height int, rgb binary", rows)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 64, fake: bool = False) -> DataFrame:
     """Video 'frame sampling' stub: emit one row per sampled frame offset —
-    exercises the 1-to-many mapInPandas shape real frame extraction needs."""
-    schema = "media_id long, frame_idx int, frame_bytes binary"
+    exercises the 1-to-many Arrow-batch shape real frame extraction
+    needs."""
+    def rows(media_id, raw: bytes):
+        if not fake:
+            raise NotImplementedError(
+                "frame extraction requires ffmpeg — pass fake=True")
+        for j, off in enumerate(range(0, len(raw), every_n_bytes)):
+            yield media_id, j, raw[off:off + every_n_bytes]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "frame extraction requires ffmpeg — pass fake=True")
-            rows = {"media_id": [], "frame_idx": [], "frame_bytes": []}
-            for rid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                for j, off in enumerate(range(0, len(raw), every_n_bytes)):
-                    rows["media_id"].append(rid)
-                    rows["frame_idx"].append(j)
-                    rows["frame_bytes"].append(bytearray(raw[off:off + every_n_bytes]))
-            yield pd.DataFrame(rows)
-
-    from .util import ensure_parallelism
-    return (ensure_parallelism(df.filter(F.col("modality") == "video"))
-            .mapInPandas(gen, schema=schema))
+    return _map_rows(df.filter(F.col("modality") == "video")
+                     .select("media_id", "payload"),
+                     "media_id long, frame_idx int, frame_bytes binary", rows)

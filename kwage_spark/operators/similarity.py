@@ -35,14 +35,14 @@ import json
 import logging
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..sources.store import _read_manifest, _read_parquet, _write_manifest
-from .dedup import hyperplane_bucket_udf, hyperplanes
-from .util import cosine
+from .dedup import hyperplane_bucket_udf, hyperplanes, sign_pattern
+from .util import cosine, matrix_list, vector_matrix
 
 logger = logging.getLogger(__name__)
 
@@ -65,6 +65,17 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
             .limit(k))
 
 
+def nearest_centroids(mat: np.ndarray, cents: np.ndarray,
+                      n: int = 1) -> np.ndarray:
+    """The ids of each row's ``n`` nearest centroids, nearest first, as an
+    (rows, n) matrix: argmin ||x-c||² = argmin (||c||² - 2 x·c), one
+    matmul for all rows."""
+    d2 = (cents * cents).sum(axis=1)[None, :] - 2.0 * (mat @ cents.T)
+    if n == 1:
+        return d2.argmin(axis=1)[:, None]
+    return np.argsort(d2, axis=1, kind="stable")[:, :n]
+
+
 def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
                      k: int = 16, iters: int = 8,
                      id_col: str = "vec_id") -> np.ndarray:
@@ -83,7 +94,6 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
     A vector whose dim differs from the seeds' raises ``ValueError``
     naming both dims (a batch with one reports it instead of its sums).
     """
-    from typing import Iterator as _It
     seed_rows = (df.orderBy(id_col).limit(k)
                  .select(vec_col).collect())
     if not seed_rows:
@@ -104,30 +114,27 @@ def kmeans_centroids(df: DataFrame, vec_col: str = "embedding",
     for _it in range(iters):
         bc = sc.broadcast(cents)
 
-        def partials(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        def partials(batches):
             c = bc.value
-            for pdf in batches:
-                if not len(pdf):
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                lens = pdf[vec_col].map(len).to_numpy()
+                m, lens = vector_matrix(batch.column(0))
                 off = lens[lens != c.shape[1]]
                 if off.size:  # a ragged column: report, the driver raises
-                    yield pd.DataFrame({"cluster": [-1], "vsum": [[]],
-                                        "cnt": [int(off[0])]})
-                    continue
-                m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                # argmin ||x-c||^2 = argmin (||c||^2 - 2 x.c) — one matmul
-                d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (m @ c.T)
-                assign = d2.argmin(axis=1)
-                rows = {"cluster": [], "vsum": [], "cnt": []}
-                for cl in np.unique(assign):
-                    sel = m[assign == cl]
-                    rows["cluster"].append(int(cl))
-                    rows["vsum"].append(sel.sum(axis=0).tolist())
-                    rows["cnt"].append(int(sel.shape[0]))
-                yield pd.DataFrame(rows)
+                    clusters, sums, cnts = [-1], np.empty((1, 0)), off[:1]
+                else:
+                    assign = nearest_centroids(m, c)[:, 0]
+                    clusters = np.unique(assign)
+                    sums = np.stack([m[assign == cl].sum(axis=0)
+                                     for cl in clusters])
+                    cnts = np.bincount(assign)[clusters]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(clusters, pa.int32()), matrix_list(sums),
+                     pa.array(cnts, pa.int64())],
+                    names=["cluster", "vsum", "cnt"])
 
-        agg = vecs.mapInPandas(
+        agg = vecs.mapInArrow(
             partials,
             schema="cluster int, vsum array<double>, cnt long").collect()
         off = [r["cnt"] for r in agg if r["cluster"] < 0]
@@ -193,16 +200,16 @@ def dequantize_embeddings(qdf: DataFrame, id_col: str = "vec_id",
 
 # ------------------------------------------------------------ vector index
 def _centroid_udf(spark, cents: np.ndarray):
-    """pandas UDF: an array column → the id of its nearest centroid."""
+    """Arrow UDF: an array column → the id of its nearest centroid."""
     bc = spark.sparkContext.broadcast(cents)
 
-    @F.pandas_udf("int")
-    def centroid_of(vecs: pd.Series) -> pd.Series:
-        c = bc.value
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (m @ c.T)
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-    return centroid_of
+    def centroid_of(vecs: pa.Array) -> pa.Array:
+        if not len(vecs):
+            return pa.array([], pa.int32())
+        m, _ = vector_matrix(vecs)
+        return pa.array(nearest_centroids(m, bc.value)[:, 0]
+                        .astype(np.int32))
+    return F.arrow_udf(centroid_of, "int")
 
 
 def build_vector_index(df: DataFrame, path: str, assign: str = "lsh",
@@ -309,13 +316,12 @@ def vector_topk(spark, path: str, query_vec: list[float], k: int = 10,
                 "nprobe applies to an IVF index; an LSH index probes the "
                 "query's bucket and its n_planes one-bit flips")
         planes = hyperplanes(dim, meta["n_planes"])
-        qsig = int(((qv @ planes.T) > 0) @ (1 << np.arange(len(planes))))
+        qsig = int(sign_pattern(qv[None, :], planes)[0])
         probes = [qsig] + [qsig ^ (1 << i) for i in range(len(planes))]
     else:
         cents = np.asarray(meta["centroids"], dtype=np.float64)
-        d2 = (cents * cents).sum(axis=1) - 2.0 * (cents @ qv)
         n = DEFAULT_NPROBE if nprobe is None else nprobe
-        probes = [int(i) for i in np.argsort(d2)[:n]]
+        probes = nearest_centroids(qv[None, :], cents, n)[0].tolist()
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cands = (_read_parquet(spark, path, meta)
              .filter(F.col(PARTITION_COL[assign]).isin(probes)))

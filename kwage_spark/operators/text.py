@@ -236,7 +236,7 @@ def frequent_tokens_mg(df: DataFrame, text_col: str, k: int = 64) -> DataFrame:
 def kmv_token_sketches(df: DataFrame, text_col: str, group_col: str,
                        k: int = 256) -> DataFrame:
     """Per-group KMV (bottom-k) sketch over distinct whitespace tokens:
-    (group, state binary, est_distinct double). Two-level mergeable
+    (group string, state binary, est_distinct double). Two-level mergeable
     aggregate — per-batch partials (each ≤ k hashes), then the grouped
     state merge every sketch takes (merge_grouped_states) — and because
     KMV state is a pure function of the token SET, the merged state is
@@ -263,7 +263,9 @@ def kmv_token_sketches(df: DataFrame, text_col: str, group_col: str,
                               pa.binary())],
                     names=[group_col, "kind", "state"])
 
-    parts = df.select(group_col, text_col).mapInArrow(
+    # keyed as strings, as build_sketches keys its groups
+    parts = df.select(F.col(group_col).cast("string").alias(group_col),
+                      text_col).mapInArrow(
         partials, schema=f"{group_col} string, kind string, state binary")
     return (merge_grouped_states(parts, [group_col])
             .select(group_col, "state",

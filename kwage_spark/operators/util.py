@@ -2,8 +2,46 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def string_ranges(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(data, starts, lens) of a non-empty Arrow string or binary array,
+    read in place: its data buffer as uint8 and each row's int64 (start,
+    length) in it, from the int32 offsets (int64 for the large types). A
+    column of only empty or null rows has no data buffer and yields an
+    empty ``data``; a null row has length 0."""
+    large = pa.types.is_large_string(col.type) or \
+        pa.types.is_large_binary(col.type)
+    _, off_buf, data_buf = col.buffers()
+    offs = np.frombuffer(off_buf, dtype=np.int64 if large else np.int32)[
+        col.offset:col.offset + len(col) + 1]
+    data = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
+            else np.empty(0, dtype=np.uint8))
+    return data, offs[:-1].astype(np.int64), np.diff(offs).astype(np.int64)
+
+
+def vector_matrix(vecs: pa.Array) -> tuple[np.ndarray | None, np.ndarray]:
+    """(matrix, lens) of a non-empty Arrow list<float|double> array: its
+    rows as one (n, dim) float64 matrix, and each row's length. The
+    matrix is None when the lengths differ (a ragged column)."""
+    offs = vecs.offsets.to_numpy()
+    lens = np.diff(offs)
+    if (lens != lens[0]).any():
+        return None, lens
+    values = vecs.values.to_numpy(zero_copy_only=False)[offs[0]:offs[-1]]
+    return values.astype(np.float64).reshape(lens.size, int(lens[0])), lens
+
+
+def matrix_list(mat: np.ndarray) -> pa.ListArray:
+    """A (rows, width) numpy matrix as an Arrow list array of its rows."""
+    rows, width = mat.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(rows + 1, dtype=np.int32) * width),
+        pa.array(mat.ravel()))
 
 
 def cosine(a: str, b: str) -> Column:
@@ -30,7 +68,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
                        key_cols: list[str] | None = None) -> DataFrame:
     """Widen thin inputs before work-amplifying stages.
 
-    Operators whose per-row cost is large (mapInPandas signature passes,
+    Operators whose per-row cost is large (mapInArrow signature passes,
     explode-by-hundreds shingles) inherit the INPUT partitioning — a
     compact table read as one parquet split serializes the whole stage
     on one task no matter how many cores the session has (measured: the

@@ -393,7 +393,7 @@ SELECT media_id, frame_idx,
 FROM f
 """)
 def q_frame_sample(spark, sf_dir):
-    """Video frame-sampling plumbing (1-to-many mapInPandas) on the
+    """Video frame-sampling plumbing (1-to-many mapInArrow) on the
     scorecard WITH an oracle: the fake extractor slices the payload every
     64 bytes, so on ASCII documents each frame is a text substring —
     DuckDB recomputes md5 + byte length of every frame relationally."""

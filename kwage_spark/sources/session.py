@@ -12,8 +12,9 @@ def get_spark(app: str = "kwage_spark", master: str | None = None,
     """Local session tuned for the sandbox; on a real cluster the same
     configs apply except master/memory come from spark-submit.
 
-    AQE is on so runtime stats re-plan skewed shuffles; Arrow is on so all
-    pandas-UDF traffic is columnar. Session TZ pinned to UTC for oracle
+    AQE is on so runtime stats re-plan skewed shuffles; Arrow is on so
+    ``toPandas`` and ``createDataFrame`` from pandas move columnar
+    batches. Session TZ pinned to UTC for oracle
     comparison parity with DuckDB.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")

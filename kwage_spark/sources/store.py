@@ -26,10 +26,9 @@ discovery work:
   ``spark.read.parquet`` are unchanged.
 * **One file per bucket.** An overwrite and a compaction exchange the
   rows on ``_bucket`` before the write, so each bucket dir holds one data
-  file (``target_files_per_bucket`` for a compaction) and a scan opens
-  as few files as there are buckets. An append adds no exchange: it
-  writes one file wave per (task, bucket), which ``compact_sketch_store``
-  folds back to one file per bucket.
+  file and a scan opens as few files as there are buckets. An append adds
+  no exchange: it writes one file wave per (task, bucket), which
+  ``compact_sketch_store`` folds back to one file per bucket.
 * **Old stores.** A store without a manifest is read exactly as before
   (listing and schema inference); ``compact_sketch_store`` migrates it
   by rewriting every bucket in the new layout and writing a manifest.
@@ -173,15 +172,10 @@ def _check_manifest(path: str, manifest: dict, what: str, group_col: str,
                          f"from {where} ({want.simpleString()})")
 
 
-def _pack_buckets(df: DataFrame, files_per_bucket: int = 1) -> DataFrame:
-    """Hash-exchange ``df``'s rows on ``_bucket`` (and on one of
-    ``files_per_bucket`` slots), so a bucket's rows reach one write task
-    and the writer leaves one file per bucket (per slot)."""
-    if files_per_bucket <= 1:
-        return df.repartition(F.col(BUCKET_COL))
-    slot = F.pmod(F.xxhash64(*[c for c in df.columns if c != "state"][:3]),
-                  F.lit(files_per_bucket))
-    return df.repartition(F.col(BUCKET_COL), slot)
+def _pack_buckets(df: DataFrame) -> DataFrame:
+    """Hash-exchange ``df``'s rows on ``_bucket``, so a bucket's rows reach
+    one write task and the writer leaves one file per bucket."""
+    return df.repartition(F.col(BUCKET_COL))
 
 
 def _write_bucketed(df: DataFrame, path: str, mode: str) -> None:
@@ -360,25 +354,24 @@ def _bucket_file_counts(spark: SparkSession, path: str) -> dict[int, int]:
 
 
 def compact_sketch_store(spark: SparkSession, path: str,
-                         group_cols: list[str] | None = None,
-                         target_files_per_bucket: int = 1) -> dict:
+                         group_cols: list[str] | None = None) -> dict:
     """Bin-pack a store's small files after many incremental writes —
     the A13 analog of the reference's smallest-first .db merge pass
     (`merge_db.cpp:215-248`): every ``mode='append'`` ingest adds a file
     wave per bucket, and a store that accrues N increments makes every
     group lookup open N files.
 
-    Only OVER-FRAGMENTED buckets (more data files than
-    ``target_files_per_bucket``) are rewritten, via dynamic partition
-    overwrite — already-compact buckets are untouched and the call is a
-    no-op on a compact store, which is what a fresh overwrite leaves
-    (one file per bucket), so after appends only the buckets they touched
-    are rewritten. A store without a manifest is migrated:
-    every bucket is rewritten in the bloom-first layout and a manifest is
-    written (module docstring). When ``group_cols`` is given, duplicate
-    (group…, kind) rows from incremental appends of the SAME group are
-    folded through the state merge (merge_grouped_states), so lookups
-    return one mergeable row per group again.
+    Only OVER-FRAGMENTED buckets (more than one data file) are
+    rewritten, via dynamic partition overwrite — already-compact buckets
+    are untouched and the call is a no-op on a compact store, which is
+    what a fresh overwrite leaves (one file per bucket), so after appends
+    only the buckets they touched are rewritten. A store without a
+    manifest is migrated: every bucket is rewritten in the bloom-first
+    layout and a manifest is written (module docstring). When
+    ``group_cols`` is given, duplicate (group…, kind) rows from
+    incremental appends of the SAME group are folded through the state
+    merge (merge_grouped_states), so lookups return one mergeable row per
+    group again.
 
     Returns {"buckets_compacted", "files_before", "files_after"}.
     """
@@ -391,7 +384,7 @@ def compact_sketch_store(spark: SparkSession, path: str,
     # every bucket in it, then record a manifest
     migrate = manifest is None
     hot = sorted(b for b, n in counts.items()
-                 if migrate or n > target_files_per_bucket)
+                 if migrate or n > 1)
     if not hot:
         return {"buckets_compacted": 0, "files_before": files_before,
                 "files_after": files_before}
@@ -404,8 +397,7 @@ def compact_sketch_store(spark: SparkSession, path: str,
                 df, group_cols)
     # cut the plan's file-source dependency so the overwrite of the path
     # being read is legal; blocks stay on executors (only hot buckets)
-    packed = _pack_buckets(df, target_files_per_bucket) \
-        .localCheckpoint(eager=True)
+    packed = _pack_buckets(df).localCheckpoint(eager=True)
 
     with _session_conf(spark, "spark.sql.sources.partitionOverwriteMode",
                        "dynamic"):

@@ -1,8 +1,10 @@
-"""The state readers cross into Python as Arrow, over one decode helper
-(``registry.decode_column``): no module below uses pandas, and every
-reader fails on a corrupt state."""
+"""The library crosses into Python as Arrow: no module under functions/
+or operators/ but checkpoint.py uses pandas, the state readers decode
+over one helper (``registry.decode_column``), and every reader fails on
+a corrupt state."""
 
 import ast
+import glob
 import os
 
 import pytest
@@ -19,8 +21,13 @@ from kwage_spark.sources.fixtures import make_source_files
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "kwage_spark")
-ARROW_ONLY = ["functions/__init__.py", "operators/merge.py",
-              "operators/diff.py", "operators/text.py"]
+#: every module under functions/ and operators/, found by glob so that a
+#: new module is covered; checkpoint.verify_manifest returns a pandas frame
+ARROW_ONLY = sorted(
+    os.path.relpath(p, PKG)
+    for d in ("functions", "operators")
+    for p in glob.glob(os.path.join(PKG, d, "*.py"))
+    if os.path.basename(p) != "checkpoint.py")
 BANNED = {"pandas_udf", "mapInPandas", "applyInPandas"}
 
 
