@@ -13,8 +13,8 @@ def get_spark(app: str = "kwage_spark", master: str | None = None,
     configs apply except master/memory come from spark-submit.
 
     AQE is on so runtime stats re-plan skewed shuffles; Arrow is on so
-    ``toPandas`` and ``createDataFrame`` from pandas move columnar
-    batches. Session TZ pinned to UTC for oracle
+    driver-side conversions between a DataFrame and a local frame move
+    columnar batches. Session TZ pinned to UTC for oracle
     comparison parity with DuckDB.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
