@@ -283,23 +283,30 @@ void bloom_scan_count(const uint8_t *B, int64_t n_rows, int64_t row_stride,
    B (n_rows x row_bytes, LSB-first bits) -> S (row_bytes*8 slices of
    slice_bytes = ceil(n_rows/8) bytes), so slice i's byte s bit k is
    row (8s+k)'s bit i; row r starts row_stride bytes after row r-1.
-   Feeds bloom_scan_count_sliced. */
+   The 8-byte column group is the outer loop: its 64 slices (64 *
+   slice_bytes) stay in cache while every 8-row block fills one byte of
+   each, where a row-block-outer loop would touch all row_bytes*8 slices
+   per block (4x slower at 1334 rows x 8 KB). Feeds
+   bloom_scan_count_sliced. */
 void bit_transpose(const uint8_t *B, int64_t n_rows, int64_t row_bytes,
                    int64_t row_stride, uint8_t *S) {
     int64_t slice_bytes = (n_rows + 7) >> 3;
-    for (int64_t r0 = 0; r0 < n_rows; r0 += 8) {
-        int nr = n_rows - r0 < 8 ? (int)(n_rows - r0) : 8;
-        int64_t sbyte = r0 >> 3;
-        for (int64_t j = 0; j < row_bytes; j++) {
-            uint64_t x = 0;
-            for (int k = 0; k < nr; k++)
-                x |= (uint64_t)B[(r0 + k) * row_stride + j] << (8 * k);
-            uint64_t t;
-            t = (x ^ (x >> 7))  & 0x00AA00AA00AA00AAULL; x ^= t ^ (t << 7);
-            t = (x ^ (x >> 14)) & 0x0000CCCC0000CCCCULL; x ^= t ^ (t << 14);
-            t = (x ^ (x >> 28)) & 0x00000000F0F0F0F0ULL; x ^= t ^ (t << 28);
-            for (int b = 0; b < 8; b++)
-                S[(j * 8 + b) * slice_bytes + sbyte] = (uint8_t)(x >> (8 * b));
+    for (int64_t j0 = 0; j0 < row_bytes; j0 += 8) {
+        int64_t j1 = row_bytes - j0 < 8 ? row_bytes : j0 + 8;
+        for (int64_t r0 = 0; r0 < n_rows; r0 += 8) {
+            int nr = n_rows - r0 < 8 ? (int)(n_rows - r0) : 8;
+            int64_t sbyte = r0 >> 3;
+            for (int64_t j = j0; j < j1; j++) {
+                uint64_t x = 0;
+                for (int k = 0; k < nr; k++)
+                    x |= (uint64_t)B[(r0 + k) * row_stride + j] << (8 * k);
+                uint64_t t;
+                t = (x ^ (x >> 7))  & 0x00AA00AA00AA00AAULL; x ^= t ^ (t << 7);
+                t = (x ^ (x >> 14)) & 0x0000CCCC0000CCCCULL; x ^= t ^ (t << 14);
+                t = (x ^ (x >> 28)) & 0x00000000F0F0F0F0ULL; x ^= t ^ (t << 28);
+                for (int b = 0; b < 8; b++)
+                    S[(j * 8 + b) * slice_bytes + sbyte] = (uint8_t)(x >> (8 * b));
+            }
         }
     }
 }

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
+from ..sources.store import state_writer
 from .ingest import build_sketches
 from .merge import merge_grouped_states
 
@@ -62,7 +63,7 @@ def write_checkpoint(sketches: DataFrame, path: str,
     the join strategy (a forced broadcast of 10⁸ group keys kills the
     driver).
     """
-    sketches.write.mode("overwrite").parquet(f"{path}/states")
+    state_writer(sketches).mode("overwrite").parquet(f"{path}/states")
     written = sketches.sparkSession.read.parquet(f"{path}/states")
 
     # F.crc32 is zlib's CRC-32: the value manifests have always held

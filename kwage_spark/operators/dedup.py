@@ -281,7 +281,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             weights: list[np.ndarray] = []
             starts: list[int] = []
             for i, text in enumerate(batch.column(1).to_pylist()):
-                counts = Counter(text.split())
+                # a null text is an empty one: no tokens, no row
+                counts = Counter(text.split() if text is not None else ())
                 if not counts:
                     continue
                 starts.append(len(tokens))

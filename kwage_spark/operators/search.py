@@ -94,10 +94,10 @@ def _count_matrix_chunks(B: np.ndarray, flat_q: np.ndarray,
 
 
 class _Queries(NamedTuple):
-    """Broadcast query set: pre-masked bit indices, not raw hashes, so
-    executors do zero per-query prep (≙ broadcasting the query's
-    slice-index set, Q2). The flat/offset form feeds the scan kernels in
-    ONE call per row chunk across ALL queries."""
+    """Query set shipped with the scan: pre-masked bit indices, not raw
+    hashes, so executors do zero per-query prep (≙ broadcasting the
+    query's slice-index set, Q2). The flat/offset form feeds the scan
+    kernels in ONE call per row chunk across ALL queries."""
     qids: np.ndarray    # (nq,) int64
     nuniq: np.ndarray   # (nq,) int64 unique k-grams; 0 = silent no-match (F10)
     thr: np.ndarray     # (nq,) int64 int(t * n_unique) truncation (kwage.cpp:388)
@@ -151,17 +151,18 @@ def _bloom_scan(sketches: DataFrame, queries: Sequence[tuple[int, str]],
     prepared = prepare_queries(queries, cfg)
     idx = [(h.astype(np.uint32) & mask).ravel() for _, h in prepared]
     nuniq = np.asarray([h.shape[0] for _, h in prepared], dtype=np.int64)
-    bq = sketches.sparkSession.sparkContext.broadcast(_Queries(
+    # captured by the closure, not sc.broadcast: each explicit broadcast
+    # leaves a temp file in the driver's temp dir until the session stops,
+    # and PySpark broadcasts a command past its 1 MB threshold by itself
+    q = _Queries(
         qids=np.asarray([qid for qid, _ in prepared], dtype=np.int64),
         nuniq=nuniq, thr=(threshold * nuniq).astype(np.int64),
         flat=np.concatenate(idx) if idx else np.empty(0, dtype=np.uint32),
         qoff=np.concatenate(([0], np.cumsum([i.size for i in idx])))
-        .astype(np.int64)))
+        .astype(np.int64))
     hdr, num_hash, n_keep = _HDR.size, cfg.bloom.num_hash, len(keep)
 
     def scan(batches):
-        q = bq.value
-
         def chunks():
             for batch in batches:
                 if batch.num_rows == 0:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import SketchConfig
 from ..operators.ingest import build_sketches
 from ..operators.merge import merge_grouped_states
+from ..sources.store import state_writer
 
 
 def stream_ingest(spark: SparkSession, input_path: str, input_schema: str,
@@ -29,7 +30,7 @@ def stream_ingest(spark: SparkSession, input_path: str, input_schema: str,
 
     def fold_batch(batch_df: DataFrame, epoch_id: int) -> None:
         partials = build_sketches(batch_df, cfg)
-        (partials.write.mode("append").parquet(state_dir))
+        state_writer(partials).mode("append").parquet(state_dir)
 
     return (stream.writeStream
             .foreachBatch(fold_batch)

@@ -261,6 +261,22 @@ def test_containment_counts_matches_search(spark, sketches, corpus):
     assert set(want) <= set(got)
 
 
+def test_searches_leave_no_temp_files(spark, sketches, corpus):
+    """The query set travels in the scan's closure: five small searches
+    leave the number of files in the driver's temp dir unchanged (an
+    explicit broadcast per search left one file each until the session
+    stopped)."""
+    import os
+    sketches.count()
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+    for i in range(5):
+        snippet = corpus.content.iloc[i][:60]
+        assert containment_search(sketches, [(i, snippet)], CFG,
+                                  threshold=0.5).collect()
+    assert len(os.listdir(temp_dir)) == before
+
+
 def test_search_ordered_equals_sorted_unordered(spark, sketches, corpus):
     """The ordered result is exactly the unordered rows sorted by
     (query_id asc, num_kmers_found desc, group cols asc) — tie-break

@@ -459,6 +459,27 @@ def test_sliced_scan_parity_with_rowmajor():
     assert (S == ref).all()
 
 
+def test_transpose_parity_at_serve_batch_shape():
+    """transpose_bits at a serve batch's shape (an odd row count of 8 KB
+    filters, read in place from the bit columns of 24-byte-header states)
+    and with a row width that leaves a partial 8-byte column group must
+    equal the numpy unpack/pack reference byte for byte."""
+    from kwage_spark.kernels import _native
+    if not _native.HAVE_NATIVE:
+        pytest.skip("no C compiler in this environment")
+    rng = np.random.default_rng(41)
+    for n_rows, row_bytes in ((1333, 8192), (77, 13)):
+        M = rng.integers(0, 256, size=(n_rows, 24 + row_bytes),
+                         dtype=np.uint8)
+        B = M[:, 24:]
+        S = _native.transpose_bits(B)
+        ref = np.packbits(np.ascontiguousarray(
+            np.unpackbits(B, axis=1, bitorder="little").T), axis=1,
+            bitorder="little")
+        assert S.shape == ref.shape
+        assert (S == ref).all(), (n_rows, row_bytes)
+
+
 def test_jumbo_query_routes_to_int32_kernel():
     """A query with >= 2^16 unique grams must NOT take the bit-sliced path
     (uint16 per-row counters would wrap mod 65536); _count_matrix_chunks

@@ -120,6 +120,19 @@ def test_simhash_token_hash_is_document_independent(spark):
     assert ham <= 12, f"shared tokens contributed differently (hamming {ham})"
 
 
+def test_signatures_skip_a_null_text(spark):
+    """A null text is an empty one: SimHash and MinHash both return a row
+    for the non-null document only, and the same signature as without
+    the null row."""
+    rows = [(1, "alpha beta gamma delta epsilon"), (2, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    alone = spark.createDataFrame(rows[:1], "doc_id long, text string")
+    for sign in (simhash_signatures, minhash_signatures):
+        got = sign(df, "doc_id", "text").collect()
+        assert [r["doc_id"] for r in got] == [1], sign.__name__
+        assert got == sign(alone, "doc_id", "text").collect(), sign.__name__
+
+
 def test_simhash_partitioning_invariant(spark, docs):
     """Signatures are a pure per-document function — identical across
     Arrow batch boundaries / partitionings."""

@@ -476,3 +476,71 @@ def test_packed_store_search_matches_unpacked_and_in_memory(spark, spread,
     assert want
     assert search(read_sketch_store(spark, packed)) == want
     assert search(spark.read.parquet(unpacked).drop("_bucket")) == want
+
+
+# ------------------------------------------------------------ page codec
+def _codecs(root):
+    """The codec of every column chunk of every parquet file under root."""
+    import pyarrow.parquet as pq
+    out = set()
+    for f in Path(root).rglob("*.parquet"):
+        md = pq.ParquetFile(f).metadata
+        out |= {md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)}
+    return out
+
+
+def test_every_state_writer_writes_zstd(spark, dense, tmp_path):
+    """Store overwrite, append and compaction, checkpoint states and
+    stream partials all leave ZSTD column chunks only."""
+    from kwage_spark.operators.checkpoint import write_checkpoint
+    from kwage_spark.sources.store import compact_sketch_store
+    from kwage_spark.streaming.ingest_stream import stream_ingest
+    pdf, sk, _, _ = dense
+    path = str(tmp_path / "store")
+    write_sketch_store(sk, path, "repo", buckets=2)
+    assert _codecs(path) == {"ZSTD"}
+    write_sketch_store(sk.limit(20), path, "repo", buckets=2, mode="append")
+    assert _codecs(path) == {"ZSTD"}
+    assert compact_sketch_store(spark, path)["buckets_compacted"] > 0
+    assert _codecs(path) == {"ZSTD"}
+
+    ckpt = str(tmp_path / "ckpt")
+    write_checkpoint(sk, ckpt)
+    assert _codecs(f"{ckpt}/states") == {"ZSTD"}
+
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    spark.createDataFrame(pdf.head(24)).write.parquet(src)
+    q = stream_ingest(spark, src, ", ".join(
+        f"{c} string" for c in pdf.columns), CFG, state,
+        str(tmp_path / "stream_ckpt"))
+    q.awaitTermination(120)
+    assert _codecs(state) == {"ZSTD"}
+
+
+def test_snappy_store_reads_appends_and_compacts(spark, dense, tmp_path,
+                                                  monkeypatch):
+    """A store written with snappy pages reads as before, takes a zstd
+    append and compacts, with every row and state byte unchanged; the
+    compacted files are ZSTD."""
+    from kwage_spark.sources import store as store_mod
+    from kwage_spark.sources.store import compact_sketch_store
+    pdf, sk, _, _ = dense
+    more = build_sketches(spark.createDataFrame(make_source_files(
+        n_repos=12, files_per_repo=3, tokens_per_file=30, seed=18)), CFG)
+    path = str(tmp_path / "store")
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "STATE_CODEC_OPTIONS", {"compression": "snappy"})
+        write_sketch_store(sk, path, "repo", buckets=2)
+    assert _codecs(path) == {"SNAPPY"}
+    assert _rows(read_sketch_store(spark, path)) == _rows(sk)
+
+    write_sketch_store(more, path, "repo", buckets=2, mode="append")
+    assert _codecs(path) == {"SNAPPY", "ZSTD"}
+    want = sorted(_rows(sk) + _rows(more))
+    assert _rows(read_sketch_store(spark, path)) == want
+
+    assert compact_sketch_store(spark, path)["buckets_compacted"] == 2
+    assert _codecs(path) == {"ZSTD"}
+    assert _rows(read_sketch_store(spark, path)) == want
